@@ -81,6 +81,76 @@ def test_merge_stream_latest_wins(spark, tdir):
     assert cdc.read_merge_table(spark, table).count() == 7
 
 
+def _group_jobs(spark, group: str) -> list[int]:
+    """Ids of the jobs started under job group ``group``, read from the
+    status tracker once the listener bus has delivered every event."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return sorted(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def _is_schema_inference(spark, job_id: int) -> bool:
+    """Parquet schema inference reads the footers in a job over a
+    parallelized file list, so its stage graph holds a
+    ParallelCollectionRDD; no stage of a DataFrame plan over files
+    does."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    graph = spark._jvm.org.apache.spark.ui.scope.RDDOperationGraph
+    return any(
+        "ParallelCollectionRDD"
+        in graph.makeDotFile(store.operationGraphForStage(stage_id))
+        for stage_id in sc.statusTracker().getJobInfo(job_id).stageIds
+    )
+
+
+def test_warm_merge_tick_job_budget(spark, tdir):
+    """A warm merge tick launches at most 5 Spark jobs and none of them
+    infers a parquet schema (the _schema.json sidecar supplies it); the
+    freshness read launches no job before its action.  A streaming
+    query runs its batches under a job group named by its run id."""
+    import os
+
+    drop, table, ckpt = f"{tdir}/drop", f"{tdir}/table", f"{tdir}/ckpt"
+    os.makedirs(drop)
+    for tick in range(3):
+        _drop_events_file(
+            drop,
+            [
+                {
+                    "eventName": "INSERT",
+                    "seq": 100 * tick + i,
+                    "newImage": {"id": f"t{i}", "price": float(tick), "shares": i},
+                    "removedId": None,
+                }
+                for i in range(60)
+            ],
+        )
+        q = cdc.start_merge_stream(
+            cdc.read_change_stream(spark, drop, max_files_per_trigger=1), table, ckpt
+        )
+        q.awaitTermination(120)
+    tick_jobs = _group_jobs(spark, str(q.runId))
+    assert 0 < len(tick_jobs) <= 5, tick_jobs
+    assert [j for j in tick_jobs if _is_schema_inference(spark, j)] == []
+
+    sc = spark.sparkContext
+    vdir = os.path.join(table, "_v3")
+    try:
+        sc.setJobGroup("merge-table-read", "freshness read")
+        got = cdc.read_merge_table(spark, table)
+        assert _group_jobs(spark, "merge-table-read") == []
+        assert got.count() == 60
+        assert _group_jobs(spark, "merge-table-read")
+        # the detector's positive control: a read without a schema infers one
+        sc.setJobGroup("inferring-read", "inferring read")
+        spark.read.parquet(vdir)
+        inferred = _group_jobs(spark, "inferring-read")
+        assert inferred and all(_is_schema_inference(spark, j) for j in inferred)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_streaming_dedup_with_watermark(spark, tdir):
     drop = f"{tdir}/drop"
     import os
