@@ -29,7 +29,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources.readers import TRADES_SCHEMA
 
@@ -58,6 +57,13 @@ def _str_lit(value: str) -> str:
     return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def _key_carrier(key: str, removed_key: str = "removedId") -> str:
+    """SQL expression: a change event's key — the image's ``key`` field,
+    or ``removed_key`` for a REMOVE (whose image is null).  NULL marks a
+    keyless event, which cannot merge."""
+    return f"coalesce(newImage.{_ident(key)}, {_ident(removed_key)})"
+
+
 def _events_in(names: tuple[str, ...]) -> str:
     """SQL predicate: ``eventName`` is one of ``names`` (NULL when the
     name is NULL)."""
@@ -84,17 +90,23 @@ def split_change_events(
 
 
 def latest_wins(
-    df: DataFrame, key: str, seq: str = "seq", tiebreak: list | None = None
+    df: DataFrame, key: str, seq: str = "seq", tiebreak: list[str] | None = None
 ) -> DataFrame:
     """A8 upsert semantics as a batch op: one row per key, max-seq image.
     Single shuffle on the key; at 100 TB pre-bucketing the table by the
     key makes this shuffle-free.  ``tiebreak`` appends deterministic
-    secondary sort columns for sources whose seq can collide (e.g.
+    secondary sort terms, as SQL ``ORDER BY`` items (e.g.
+    ``"__is_remove DESC"``), for sources whose seq can collide (e.g.
     Debezium ts_ms — two same-millisecond changes to one key); without
     one, equal-seq winners are partitioning-dependent."""
-    order = [F.col(seq).desc(), *(tiebreak or [])]
-    w = Window.partitionBy(key).orderBy(*order)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+    order = ", ".join([f"{_ident(seq)} DESC", *(tiebreak or [])])
+    return (
+        df.selectExpr(
+            "*", f"row_number() OVER (PARTITION BY {_ident(key)} ORDER BY {order}) AS __rn"
+        )
+        .filter("__rn = 1")
+        .drop("__rn")
+    )
 
 
 # Target base rows merge at a sentinel BELOW any valid event seq, so a
@@ -138,10 +150,9 @@ def apply_changes(
     target; ``removed_key`` is the top-level column carrying the key of
     a REMOVE event (whose newImage is null).
 
-    The merge plan is built from a handful of SQL-string calls, one
-    ``selectExpr`` per side (identifiers backtick-quoted, field names as
-    string literals), not one py4j round trip per field and function:
-    with this, a streaming merge tick makes ~100 py4j calls, not ~1,340.
+    The plan is built from SQL strings: identifiers are backtick-quoted
+    (``_ident``) and field names are passed as escaped string literals
+    (``_str_lit``).
     """
     if mode not in ("append", "merge"):
         raise ValueError(f"unknown apply mode: {mode}")
@@ -153,7 +164,7 @@ def apply_changes(
 
     valid, _ = split_change_events(changes, keep_remove=True)
     event_cols = [
-        f"coalesce(newImage.{_ident(key)}, {_ident(removed_key)}) AS __key",
+        f"{_key_carrier(key, removed_key)} AS __key",
         f"{_ident(seq)} AS __seq",
         "eventName = 'REMOVE' AS __is_remove",
     ]
@@ -212,18 +223,25 @@ def apply_changes(
     # seq ties resolve deterministically: REMOVE beats an image at the
     # same seq (delete-wins, the conservative CDC resolution — a
     # resurrected deleted row is worse than a dropped same-instant
-    # update), then a content hash so equal-seq images can never be
-    # partitioning-dependent (latest_wins, as one window expression).
-    # Base rows (one per key at the sentinel seq) never tie, so they
-    # skip the hash: most rows of an incremental merge window are base
-    # rows.
-    ranked = flat.selectExpr(
-        "*",
-        "row_number() OVER (PARTITION BY __key ORDER BY __seq DESC, "
-        f"__is_remove DESC, CASE WHEN __seq = {_BASE_SEQ}L THEN 0L "
-        "ELSE xxhash64(to_json(__img)) END DESC) AS __rn",
+    # update), then a content hash so equal-seq EVENT images are never
+    # partitioning-dependent.  Base rows skip the hash (most rows of an
+    # incremental merge window are base rows): that is deterministic
+    # only for a keyed target, one row per key — two target rows with
+    # one key would tie at the sentinel seq with no tiebreak.
+    return (
+        latest_wins(
+            flat,
+            "__key",
+            "__seq",
+            tiebreak=[
+                "__is_remove DESC",
+                f"CASE WHEN __seq = {_BASE_SEQ}L THEN 0L "
+                "ELSE xxhash64(to_json(__img)) END DESC",
+            ],
+        )
+        .filter("NOT __is_remove")
+        .select("__img.*")
     )
-    return ranked.filter("__rn = 1 AND NOT __is_remove").select("__img.*")
 
 
 def snapshot_union_cdc(
@@ -231,7 +249,10 @@ def snapshot_union_cdc(
 ) -> DataFrame:
     """A17 full-load-and-cdc: initial snapshot overridden by any later
     change images (DMS migration_type='full-load-and-cdc',
-    reference: cdk_infrastructure/__init__.py:260)."""
+    reference: cdk_infrastructure/__init__.py:260).  The snapshot must
+    be keyed, one row per key, as ``apply_changes`` requires: the winner
+    among duplicate snapshot rows of a key no change touches is
+    partitioning-dependent."""
     return apply_changes(snapshot, changes, key=key, seq=seq, mode="merge")
 
 
@@ -425,21 +446,17 @@ def start_merge_stream(
     """
     from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources import versioned as V
 
-    # the rows that merge: a known event name (REMOVE included) and a
-    # key carrier; the rest — unknown or null names (split_change_events'
-    # invalid side) and keyless events — is the error channel
-    batch_key = f"coalesce(newImage.{_ident(key)}, removedId)"
-    mergeable = f"{_events_in(ALLOWED_EVENTS + ('REMOVE',))} AND {batch_key} IS NOT NULL"
+    batch_key = _key_carrier(key)
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         batch = batch.persist()
         try:
-            valid = batch.filter(mergeable)
+            valid, invalid = split_change_events(batch, keep_remove=True)
             if errors_dir is not None:
-                batch.filter(f"NOT coalesce({mergeable}, false)").write.mode(
-                    "append"
-                ).json(errors_dir)
+                keyless = valid.filter(f"{batch_key} IS NULL")
+                invalid.unionByName(keyless).write.mode("append").json(errors_dir)
+            valid = valid.filter(f"{batch_key} IS NOT NULL")
             # touched buckets from the rows that will actually merge —
             # error rows must not force no-op bucket rewrites
             touched = sorted(
