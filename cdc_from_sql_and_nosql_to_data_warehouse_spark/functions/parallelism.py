@@ -71,6 +71,13 @@ def spread(df: DataFrame, factor: int = 1) -> DataFrame:
     BEFORE the fan-out, so the shuffle moves pre-multiplication rows.
     ``factor`` > 1 suits extreme per-row cost where even one width's
     tasks straggle (rare; measure first).
+
+    One exception to "narrow": a frame that carries a payload (embedding
+    vectors in q_dedup_embedding, q_semdedup, q_eval_confusion) may be
+    spread when it feeds a pair fold, whose work grows with the square
+    of its rows.  The exchange moves each payload once, before the
+    pairing; the fold would otherwise run every pair on the scan's few
+    tasks.  Spreading the multiplied pair rows instead is never right.
     """
     try:
         width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))

@@ -11,8 +11,12 @@ package imports eagerly at the bottom.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import glob
+import json
+import re
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -111,344 +115,65 @@ from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators import (  # noqa: 
     udfs,
 )
 
+
 # ---------------------------------------------------------------- ordering
 #
-# The driver's CORRECTNESS check covers the FIRST 50 registry entries per
-# round.  Rounds 1 and 2 verified the 100 names below (all green); the
-# registry is reordered so the round-3 verification window covers the
-# queries that do not yet have a driver CORRECTNESS row:
-#   group 0 — never driver-checked, oracle-bearing (can go green), incl.
-#             every operator newly registered this round;
-#   group 1 — never checked but redundant for §2 component coverage
-#             (their component already has a green row from round 1);
-#   group 2 — never checked, rows-only (no oracle, can't go green);
-#   group 3 — already green in CORRECTNESS_r01/r02.json.
-# Registration order is preserved within each group.
+# The driver's CORRECTNESS check covers only the FIRST 50 registry
+# entries per round, so the registry order decides what gets verified.
+# It is read from the newest driver row per query alone:
+#   0 — failed: the newest row is not green (its fix needs a green row);
+#   1 — never checked, oracle-bearing (can go green);
+#   2 — never checked, rows-only (can run, never go green);
+#   3 — green, least recently checked first, so stale rows get refreshed.
+# Registration order breaks ties (the sort is stable).
 
-_R01_CHECKED = frozenset(
-    {
-        "q_csv_scan", "q_rename_project", "q_typed_parse", "q_append_count",
-        "q_json_scan", "q_upsert_latest_wins", "q_event_filter",
-        "q_json_extract_cast", "q_append_by_name", "q_snapshot_union_cdc",
-        "q_count_star", "q_scd2_build", "q_snapshot_diff",
-        "q_debezium_roundtrip", "q_dedup_exact", "q_dedup_exact_rows",
-        "q_dedup_near_minhash", "q_dedup_ngram_jaccard", "q_dedup_simhash",
-        "q_dedup_embedding", "q_dedup_clusters", "q_fuzzy_match",
-        "q_multimodal_join", "q_binary_meta", "q_multimodal_decode",
-        "q_multimodal_frames", "q_pricing_summary", "q_scan_lineitem",
-        "q_project_expr", "q_filter_between", "q_filter_in_like",
-        "q_join_inner", "q_join_left", "q_join_right", "q_join_full",
-        "q_join_semi", "q_join_anti", "q_join_theta", "q_star_join",
-        "q_group_agg", "q_distinct", "q_count_distinct",
-        "q_approx_count_distinct", "q_rollup", "q_cube", "q_having",
-        "q_window_rank", "q_window_lag", "q_window_running_sum",
-        "q_window_moving_avg",
-    }
-)
+# query name -> (round, green) of its newest driver row
+_Verdicts = dict[str, tuple[int, bool]]
 
-# Round-2 window (CORRECTNESS_r02.json keys, all green) — absorbed so
-# the round-3 window promotes the still-unchecked queries.
-_R02_CHECKED = frozenset(
-    {
-        "q_dedup_minhash_md5", "q_sort_multi", "q_topk", "q_union",
-        "q_intersect", "q_except", "q_subquery_in", "q_subquery_scalar",
-        "q_subquery_exists", "q_case_when", "q_string_funcs",
-        "q_date_funcs", "q_date_trunc_agg", "q_math_funcs",
-        "q_money_parse", "q_array_explode", "q_array_lambda",
-        "q_map_funcs", "q_json_get", "q_json_from_schema",
-        "q_null_handling", "q_pivot", "q_explode_outer",
-        "q_regexp_extract_all", "q_correlated_min", "q_sample_per_group",
-        "q_min_cost_supplier", "q_sim_topk", "q_sim_range",
-        "q_text_tokens", "q_token_count", "q_text_quality",
-        "q_text_langid", "q_text_lexicon", "q_fingerprint",
-        "q_text_ngrams", "q_text_tfidf", "q_udtf_tokens",
-        "q_token_count_bpe", "q_asof_join", "q_range_join",
-        "q_sessionize", "q_grouping_sets", "q_shipping_priority",
-        "q_late_shipment_priority", "q_asof_tolerance", "q_udf_scalar",
-        "q_udf_grouped_agg", "q_udf_apply_in_pandas",
-        "q_udf_map_in_pandas",
-    }
-)
 
-def _driver_rows_from_disk() -> tuple[frozenset[str], frozenset[str], dict]:
-    """Absorb every CORRECTNESS_r*.json the driver has produced so far,
-    so the window self-rolls at the start of each round.  Returns
-    (green, attempted, latest_round):
+def _round_of(path: str) -> int:
+    m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+    return int(m.group(1)) if m else -1
 
-    - *green* — rows that passed (hash match, or the rows-only
-      ``no_oracle`` outcome); these yield their window slot for good.
-    - *attempted* — ANY driver row, including failures and errors.
-      A failed/errored query stays in the window (it is not green) but
-      it HAS consumed its round, so the parked queue behind it must
-      still self-promote — computing round-doneness from greens alone
-      was the round-3 priority inversion (VERDICT r3 §wrong-4).
-    - *latest_round* — per-name round number of the newest driver row,
-      feeding the round-11 freshness rotation: once every query has
-      been checked at least once (true since the r10 sf1 sweep), the
-      window's spare slots go to the LEAST-recently-checked greens
-      (oldest round first) so a B-tier query green in round 1 gets a
-      fresh row instead of never being looked at again (VERDICT r10
-      next-5).
 
-    Absorption is LATEST-ROUND-WINS per query name: a query green in
-    round N but red in round N+1 re-enters the window (its newest row
-    is not green).  Green-in-any-round-wins-forever was the round-6
-    semantics the registry-window test exposed (VERDICT r6 §wrong-1) —
-    under that rule a driver regression could never re-open a slot.
+def _driver_verdicts() -> _Verdicts:
+    """Newest driver row per query name, as ``(round, green)``, read from
+    every CORRECTNESS_r*.json in the repo root.
 
-    The hardcoded _R01/_R02 sets remain the fallback if the files are
-    absent (fresh clone)."""
-    import glob
-    import json
-    import re
-    from pathlib import Path
-
+    Latest round wins: a query green in round N but red in round N+1 is
+    not green, so a driver regression re-opens its window slot.  Green
+    means a hash match, or the rows-only ``no_oracle`` outcome; a failed
+    or errored row is not green."""
     repo = Path(__file__).resolve().parents[2]
-    # newest row per name wins: walk files in ascending round order so
-    # later rounds overwrite earlier verdicts for the same query
-    def _round_of(p: str) -> int:
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)
-        return int(m.group(1)) if m else -1
-
-    latest: dict[str, dict] = {}
-    latest_round: dict[str, int] = {}
-    for path in sorted(glob.glob(str(repo / "CORRECTNESS_r*.json")),
-                       key=_round_of):
+    verdicts: _Verdicts = {}
+    # ascending round order, so later rounds overwrite earlier rows
+    for path in sorted(glob.glob(str(repo / "CORRECTNESS_r*.json")), key=_round_of):
         try:
-            rows = json.load(open(path))
+            with open(path) as fh:
+                rows = json.load(fh)
         except (OSError, ValueError):
             continue
         if not isinstance(rows, dict):
             continue
         for name, row in rows.items():
             if isinstance(row, dict):
-                latest[name] = row
-                latest_round[name] = _round_of(path)
-
-    attempted = set(latest)
-    # only GREEN (in the newest round that touched them) rows yield
-    # their window slot: a failed or errored query stays in the window
-    # for re-verification after the fix
-    green = {
-        name for name, row in latest.items()
-        if row.get("hash_match") or row.get("err") == "no_oracle"
-    }
-    return frozenset(green), frozenset(attempted), latest_round
+                green = bool(row.get("hash_match")) or row.get("err") == "no_oracle"
+                verdicts[name] = (_round_of(path), green)
+    return verdicts
 
 
-def _driver_checked_from_disk() -> frozenset[str]:
-    return _driver_rows_from_disk()[0]
+def _window_key(spec: QuerySpec, verdicts: _Verdicts) -> tuple[int, int]:
+    if spec.name not in verdicts:
+        return (1, 0) if spec.oracle else (2, 0)
+    rnd, green = verdicts[spec.name]
+    return (3, rnd) if green else (0, 0)
 
 
-_DISK_GREEN, _DISK_ATTEMPTED, _DISK_LATEST_ROUND = _driver_rows_from_disk()
-_DRIVER_CHECKED = _R01_CHECKED | _R02_CHECKED | _DISK_GREEN
-_DRIVER_ATTEMPTED = _R01_CHECKED | _R02_CHECKED | _DISK_ATTEMPTED
-
-# The round-3 window: every remaining never-driver-checked oracle-bearing
-# query (48 = this queue + _DEFER_REDUNDANT).  Newly-registered round-3
-# queries default to group 0 as well; the window-budget test
-# (tests/test_registry_window.py) asserts the 48 still fit in the first 50.
-_R03_QUEUE = frozenset(
-    {
-        "q_corpus_curation",
-        "q_local_supplier_volume",
-        "q_returned_item_revenue",
-        "q_bpe_pair_freqs",
-        "q_embedding_normalize",
-        "q_embedding_centroids",
-        # TPC-H breadth shapes (operators/tpch_shapes.py)
-        "q_volume_shipping",
-        "q_market_share",
-        "q_product_profit",
-        "q_shipmode_priority",
-        "q_customer_distribution",
-        "q_promo_revenue",
-        "q_small_qty_revenue",
-        "q_large_volume_customer",
-        "q_disjunctive_join",
-        "q_global_sales_opportunity",
-        "q_forecast_revenue",
-        "q_top_supplier",
-        "q_waiting_supplier",
-        "q_dominant_supplier",
-        # corpus-curation passes (operators/curation.py)
-        "q_text_repetition",
-        "q_decontaminate",
-        "q_pii_redact",
-        "q_dedup_report",
-        # tokenization-prep ops (operators/packing.py)
-        "q_chunk_documents",
-        "q_pack_sequences",
-        "q_embedding_quantize",
-        "q_lm_score",
-        "q_dataset_mixture",
-        # oracle-checked simhash + clusters (operators/dedup.py)
-        "q_dedup_simhash_md5",
-        "q_dedup_clusters_md5",
-        # z-order layout (operators/layout.py)
-        "q_zorder_layout",
-        # lateral subquery + profiling + join/window breadth (operators/relational.py)
-        "q_lateral_topk",
-        "q_table_profile",
-        "q_join_null_safe",
-        "q_window_ntile",
-        # event analytics (operators/timeseries.py)
-        "q_event_funnel",
-        "q_retention_cohorts",
-        "q_event_transitions",
-        "q_sliding_active_users",
-    }
-)
-
-# Unchecked extras whose §2 component already went green via a sibling
-# query in round 1 — deferred behind the component-critical set.
-_DEFER_REDUNDANT = frozenset(
-    {
-        "q_join_salted",          # B4 green via q_join_inner
-        "q_join_cross",           # B7 green via q_join_theta
-        "q_stats_agg",            # B9 green via q_group_agg/q_pricing_summary
-        "q_percentile",           # B9
-        "q_histogram",            # B9
-        "q_array_agg",            # B9
-        "q_window_distribution",  # B13 green via q_window_rank
-        "q_window_range_frame",   # B15 green via q_window_running_sum
-    }
-)
+def _window_order(specs: Iterable[QuerySpec], verdicts: _Verdicts) -> list[QuerySpec]:
+    return sorted(specs, key=lambda s: _window_key(s, verdicts))
 
 
-# Round-3 additions beyond the window budget (48 queued + q_sim_topk_arrow
-# + q_semdedup fill all 50 slots): parked just past the window; they go to
-# the FRONT of the round-4 window when _DRIVER_CHECKED absorbs
-# CORRECTNESS_r03.
-_R04_QUEUE = frozenset(
-    {
-        "q_token_budget",
-        "q_cross_dedup",
-        "q_dedup_incremental",
-        "q_dedup_segments",
-        "q_split_train_eval",
-        "q_length_quantile_filter",
-        "q_corpus_shuffle",
-        "q_knn_classify",
-        "q_quality_classifier",
-        "q_feature_drift",
-        "q_winsorize",
-        "q_pagerank",
-        "q_kmeans_assign",
-        "q_sim_pq",
-        "q_weighted_sample",
-        "q_merge_into",
-        "q_mad_outliers",
-        "q_window_first_last",
-        "q_sim_pq_search",
-        "q_token_entropy",
-        "q_linear_fit",
-        "q_pseudonymize",
-        "q_embedding_outliers",
-        "q_gap_fill",
-        "q_unpivot",
-        "q_interpolate",
-        "q_ab_ttest",
-        "q_autocorr",
-        "q_pmi_skipgram",
-        "q_rfm_segmentation",
-        "q_market_basket",
-        "q_cusum",
-        "q_benford",
-        "q_triangle_count",
-        "q_source_overlap",
-        "q_bpe_apply",
-        "q_rollup_merge",
-        "q_equidepth_bins",
-        "q_cumulative_users",
-        "q_setsim_join",
-        "q_seasonality_profile",
-        "q_new_vs_returning",
-        "q_time_weighted_avg",
-        "q_rolling_bands",
-        "q_catalog_summary",
-        "q_dq_expectations",
-        "q_dq_referential",
-        "q_bloom_prune_join",
-        "q_skyline",
-        "q_variant_shred",
-        "q_reachability",
-        "q_xml_roundtrip",
-        "q_aes_roundtrip",
-        "q_column_mask",
-        "q_bpe_train",
-        "q_scd2_point_in_time",
-        "q_mv_incremental",
-        "q_schema_evolution",
-        "q_dedup_url",
-        "q_bm25_search",
-        "q_dedup_containment",
-        "q_ts_similarity",
-        "q_k_anonymity",
-        "q_topk_incremental",
-        "q_class_balance",
-    }
-)
-
-
-# rows-only queries registered in rounds 1-5 that have never been
-# through a driver window even as a no_oracle row (VERDICT r5 item 2)
-_ROWS_ONLY_DRAIN = frozenset(
-    {"q_sim_topk_lsh", "q_sim_ivf", "q_heavy_hitters", "q_audience_overlap_hll"}
-)
-
-
-def _checked_round(name: str) -> int:
-    """Round number of the newest driver row for *name*; hardcoded-set
-    fallbacks map to their round when no disk row exists (fresh clone)."""
-    if name in _DISK_LATEST_ROUND:
-        return _DISK_LATEST_ROUND[name]
-    return 2 if name in _R02_CHECKED else 1
-
-
-def _window_priority(spec: QuerySpec) -> tuple[int, int]:
-    if spec.name in _DRIVER_CHECKED:
-        # green — yields its slot to anything unverified, but among the
-        # greens the LEAST-recently-checked rotates to the front
-        # (VERDICT r10 next-5): with all 325 queries now attempted at
-        # least once, the window's spare slots refresh the stalest rows
-        # (r1/r2 greens are 9 rounds old) instead of re-checking the
-        # same newest additions forever.
-        return (6, _checked_round(spec.name))
-    if spec.name in _DRIVER_ATTEMPTED:
-        # attempted but NOT green: a driver failure/error.  Highest
-        # priority — the fix ships this round and must be re-verified
-        # before anything new consumes a slot.
-        return (0, 0)
-    if not spec.oracle:
-        # the four rows-only queries that have NEVER had a driver row
-        # drain first (ahead of anything newly registered); any OTHER
-        # rows-only query (including future additions) sorts LAST among
-        # the unchecked — it can never go green, so it must never
-        # displace a verifiable oracle-bearing query from the window
-        # (review-caught: a blanket `return 1` put brand-new rows-only
-        # registrations ahead of the very four this rule exists for)
-        return (1, 0) if spec.name in _ROWS_ONLY_DRAIN else (5, 0)
-    if spec.name in _R03_QUEUE:
-        return (1, 0)
-    if spec.name in _DEFER_REDUNDANT:
-        return (2, 0)
-    if spec.name in _R04_QUEUE:
-        # parked queue: self-promotes the moment the round-3 window
-        # was ATTEMPTED (not necessarily green) — always ahead of
-        # anything registered after it
-        return (3, 0)
-    # oracle-bearing queries registered this round: strictly behind
-    # the parked queue so a new addition can never push a parked
-    # query out of the window
-    return (4, 0)
-
-
-def _reorder_registry() -> None:
-    ordered = sorted(REGISTRY.values(), key=_window_priority)  # stable
-    items = {spec.name: spec for spec in ordered}
-    REGISTRY.clear()
-    REGISTRY.update(items)
-
-
-_reorder_registry()
+_VERDICTS = _driver_verdicts()
+_ordered = _window_order(REGISTRY.values(), _VERDICTS)
+REGISTRY.clear()
+REGISTRY.update((s.name, s) for s in _ordered)

@@ -19,8 +19,6 @@ bit-identical doubles and the driver's value-hash matches.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1461,8 +1459,8 @@ _CF_TOPK = 5
 # the win is at the blowup decades — hot item pairs' evidence rows
 # split across S reduce keys, so no single reduce task owns a popular
 # pair's full count stream (the sf10 probe measured 62 GB spill with
-# the single-level agg).  Env-tunable for probes.
-_CF_SHARDS = int(os.environ.get("SPARK_GRAFT_CF_SHARDS", "16"))
+# the single-level agg).
+_CF_SHARDS = 16
 
 
 @register(

@@ -20,6 +20,15 @@ from conftest import SF_DIR, TABLES
 from test_oracle_diff import replay_oracle_parity
 
 QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle)
+# cheap headline shapes kept in the default run while the full sweep
+# is `slow`: scan, join, aggregate, window, latest-wins upsert
+CANARY = [
+    "q_scan_lineitem",
+    "q_join_inner",
+    "q_group_agg",
+    "q_window_rank",
+    "q_upsert_latest_wins",
+]
 
 
 @pytest.fixture(scope="module")
@@ -34,4 +43,9 @@ def empty_dir(tmp_path_factory):
 @pytest.mark.slow
 def test_empty_tables_oracle_parity(spark, empty_dir):
     failures = replay_oracle_parity(spark, empty_dir, QUERIES)
+    assert not failures, failures
+
+
+def test_empty_tables_canary(spark, empty_dir):
+    failures = replay_oracle_parity(spark, empty_dir, CANARY)
     assert not failures, failures

@@ -1,33 +1,49 @@
-"""Registry verification-window budget (SURVEY.md §5.2.1).
+"""Registry verification-window order (SURVEY.md §5.2.1).
 
 The driver's CORRECTNESS gate checks only the FIRST 50 entries of
-``operators.REGISTRY`` per round.  These tests pin the post-round-3
-contract: driver failures re-verify first, the parked round-4 queue
-self-promotes once its predecessors were ATTEMPTED (green or not), and
-queries registered later can never displace parked ones.
+``operators.REGISTRY`` per round.  The order comes from the newest
+driver row per query alone: failed first, then never checked
+(oracle-bearing before rows-only), then green, least recently checked
+first, with registration order breaking ties.
 """
 
 from __future__ import annotations
+
+import glob as _glob
+import json
 
 from cdc_from_sql_and_nosql_to_data_warehouse_spark import operators as ops
 
 WINDOW = 50
 
+_GREEN = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+_RED = {"rows_match": True, "schema_match": True, "hash_match": False, "err": None}
+_ROWS_ONLY = {"rows_match": None, "schema_match": None, "hash_match": None,
+              "err": "no_oracle"}
 
-def _window_names() -> list[str]:
-    return list(ops.REGISTRY)[:WINDOW]
+
+def _green(name: str) -> bool:
+    return ops._VERDICTS.get(name, (0, False))[1]
+
+
+def _write_rounds(tmp_path, monkeypatch, rounds: dict[int, dict]) -> None:
+    """Fake CORRECTNESS_r{N}.json files; glob returns ONLY these, in
+    descending round order, so the reader must sort by round and must
+    not depend on what the driver has written to the repo root."""
+    paths = []
+    for rnd, rows in rounds.items():
+        p = tmp_path / f"CORRECTNESS_r{rnd:02d}.json"
+        p.write_text(json.dumps(rows))
+        paths.append(str(p))
+    monkeypatch.setattr(_glob, "glob", lambda pat: sorted(paths, reverse=True))
 
 
 def test_driver_failures_reverify_at_window_front():
-    """Every query the driver attempted but did not pass (the round-3
-    ERR rows) must sit at the very front of the window — their fixes
-    ship this round and need a green row before new work spends
-    slots."""
-    failed = [
-        s.name
-        for s in ops.REGISTRY.values()
-        if s.name in ops._DRIVER_ATTEMPTED and s.name not in ops._DRIVER_CHECKED
-    ]
+    """Every query whose newest driver row failed sits at the very front
+    of the window — its fix needs a green row before anything else
+    spends a slot."""
+    failed = [n for n, (_, green) in ops._VERDICTS.items()
+              if not green and n in ops.REGISTRY]
     order = list(ops.REGISTRY)
     for n in failed:
         assert order.index(n) < len(failed), (
@@ -39,165 +55,62 @@ def test_driver_failures_reverify_at_window_front():
 def test_window_filled_by_unverified_before_anything_green():
     """While not-yet-green queries remain, no green query occupies a
     window slot."""
-    n_not_green = sum(
-        1 for s in ops.REGISTRY.values() if s.name not in ops._DRIVER_CHECKED
-    )
+    n_not_green = sum(1 for n in ops.REGISTRY if not _green(n))
     if n_not_green < WINDOW:
         return  # window has spare room; green entries may legitimately fill it
-    greens = [n for n in _window_names() if n in ops._DRIVER_CHECKED]
+    greens = [n for n in list(ops.REGISTRY)[:WINDOW] if _green(n)]
     assert not greens, f"window slots wasted on already-green queries: {greens}"
 
 
-def test_parked_queue_promotes_ahead_of_new_registrations():
-    """The round-3 priority-inversion regression test: every
-    never-attempted _R04_QUEUE query precedes every oracle-bearing
-    query that is in NO queue (i.e. registered in round 4+)."""
-    order = list(ops.REGISTRY)
-    queued = ops._R03_QUEUE | ops._DEFER_REDUNDANT | ops._R04_QUEUE
-    parked_idx = [
-        order.index(s.name)
-        for s in ops.REGISTRY.values()
-        if s.name in ops._R04_QUEUE and s.name not in ops._DRIVER_ATTEMPTED
-    ]
-    new_idx = [
-        order.index(s.name)
-        for s in ops.REGISTRY.values()
-        if s.oracle
-        and s.name not in queued
-        and s.name not in ops._DRIVER_ATTEMPTED
-    ]
-    if parked_idx and new_idx:
-        assert max(parked_idx) < min(new_idx), (
-            "a round-4+ registration displaced a parked _R04_QUEUE query"
-        )
-
-
-def test_window_is_exactly_failures_then_parked_queue():
-    """With 3 driver failures and >47 parked queries, the round-4
-    window must be: the failures, then the first 47 parked entries in
-    registration order — nothing else."""
-    failed = {
-        s.name
-        for s in ops.REGISTRY.values()
-        if s.name in ops._DRIVER_ATTEMPTED and s.name not in ops._DRIVER_CHECKED
-    }
-    if not failed:
-        return  # a future round where everything went green
-    window = _window_names()
-    assert failed <= set(window[: len(failed)])
-    for n in window[len(failed) :]:
-        assert n in ops._R04_QUEUE, (
-            f"{n} fills a window slot but is neither a driver failure "
-            "nor a parked _R04_QUEUE query"
-        )
-
-
-def test_queue_names_are_registered():
-    for name in (
-        ops._R03_QUEUE | ops._DEFER_REDUNDANT | ops._DRIVER_CHECKED | ops._R04_QUEUE
-    ):
-        assert name in ops.REGISTRY, f"stale name in ordering sets: {name}"
-
-
-def test_disk_absorption_matches_hardcoded_sets():
-    """The dynamic CORRECTNESS_r*.json absorption must agree with the
-    hardcoded r1/r2 fallback sets (same greens), and a hypothetical
-    failed row must NOT be absorbed."""
-    from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators import (
-        _R01_CHECKED,
-        _R02_CHECKED,
-        _driver_checked_from_disk,
-    )
-
-    disk = _driver_checked_from_disk()
-    # every hardcoded name that has a disk row is confirmed green there
-    assert _R02_CHECKED <= disk
-    # r1 greens (incl. rows-only "no_oracle" entries) are all absorbed
-    assert _R01_CHECKED <= disk
-
-
 def test_failed_rows_are_attempted_but_not_green():
-    """The three round-3 ERR rows drive the new priority logic: they
-    must be in _DRIVER_ATTEMPTED yet outside _DRIVER_CHECKED."""
-    green, attempted, _ = ops._driver_rows_from_disk()
-    assert green <= attempted
-    failed = attempted - green
-    # round-3 produced exactly these errors; later rounds may clear them
-    for n in failed:
-        assert n in ops.REGISTRY
-        assert n not in ops._DRIVER_CHECKED
-        assert n in ops._DRIVER_ATTEMPTED
+    """A failed or errored newest row is a driver attempt on a
+    registered query, and it keeps that query out of the green tier."""
+    for n, (_, green) in ops._VERDICTS.items():
+        if not green:
+            assert n in ops.REGISTRY
+            assert ops._window_key(ops.REGISTRY[n], ops._VERDICTS) == (0, 0)
 
 
 def test_window_rolls_forward_when_correctness_lands(tmp_path, monkeypatch):
-    """Simulate the driver writing a new CORRECTNESS file: every green
-    name must be absorbed; a failed row must not be.
-
-    glob is patched to return ONLY the fake file — round 6 appended it
-    to the real on-disk results, so the moment the driver wrote a real
-    green row for fail_name the union absorbed it and the assert went
-    red (VERDICT r6 §wrong-1).  The test must not depend on what the
-    driver has written to the repo root."""
-    import json
-
-    front = list(ops.REGISTRY)[:50]
-    fake = {name: {"rows_match": True, "schema_match": True,
-                   "hash_match": True, "err": None} for name in front}
-    # one failure: must stay unabsorbed (but count as attempted)
+    """Simulate the driver writing a new CORRECTNESS file over the
+    current window: its greens leave the window, its failure stays at
+    the front."""
+    front = list(ops.REGISTRY)[:WINDOW]
+    fake = {name: dict(_GREEN) for name in front}
     fail_name = front[0]
-    fake[fail_name]["hash_match"] = False
-    p = tmp_path / "CORRECTNESS_r99.json"
-    p.write_text(json.dumps(fake))
+    fake[fail_name] = dict(_RED)
+    _write_rounds(tmp_path, monkeypatch, {99: fake})
 
-    import glob as _glob
+    verdicts = ops._driver_verdicts()
+    assert verdicts[fail_name] == (99, False)
+    assert all(verdicts[n] == (99, True) for n in front[1:])
 
-    monkeypatch.setattr(_glob, "glob", lambda pat: [str(p)])
-    green, attempted, _ = ops._driver_rows_from_disk()
-    assert fail_name not in green
-    assert fail_name in attempted
-    assert set(front[1:]) <= green
+    order = ops._window_order(ops.REGISTRY.values(), verdicts)
+    window = [s.name for s in order[:WINDOW]]
+    assert window[0] == fail_name
+    assert not set(front[1:]) & set(window)
 
 
 def test_green_then_red_reenters_window(tmp_path, monkeypatch):
-    """Latest-round-wins: a query green in round N but red in round N+1
-    must drop out of the green set (slot re-opens) while remaining
-    attempted.  Green-in-any-round-wins-forever would mask a driver
-    regression permanently."""
-    import json
-
+    """Latest round wins: a query green in round N but red in round N+1
+    is not green (its slot re-opens).  Green-in-any-round-wins-forever
+    would mask a driver regression permanently."""
     name = list(ops.REGISTRY)[0]
-    green_row = {name: {"rows_match": True, "schema_match": True,
-                        "hash_match": True, "err": None}}
-    red_row = {name: {"rows_match": True, "schema_match": True,
-                      "hash_match": False, "err": None}}
-    p1 = tmp_path / "CORRECTNESS_r01.json"
-    p2 = tmp_path / "CORRECTNESS_r02.json"
-    p1.write_text(json.dumps(green_row))
-    p2.write_text(json.dumps(red_row))
+    _write_rounds(tmp_path, monkeypatch, {1: {name: _GREEN}, 2: {name: _RED}})
+    verdicts = ops._driver_verdicts()
+    assert verdicts[name] == (2, False)
+    assert ops._window_key(ops.REGISTRY[name], verdicts) == (0, 0)
 
-    import glob as _glob
-
-    # deliberately unsorted order: the function must sort by round
-    monkeypatch.setattr(_glob, "glob", lambda pat: [str(p2), str(p1)])
-    green, attempted, _ = ops._driver_rows_from_disk()
-    assert name not in green
-    assert name in attempted
-
-    # and the reverse: red-then-green absorbs
-    p1.write_text(json.dumps(red_row))
-    p2.write_text(json.dumps(green_row))
-    green, attempted, _ = ops._driver_rows_from_disk()
-    assert name in green
+    # and the reverse: red-then-green is green, dated by the newer round
+    _write_rounds(tmp_path, monkeypatch, {1: {name: _RED}, 2: {name: _GREEN}})
+    assert ops._driver_verdicts()[name] == (2, True)
 
 
 def test_green_slots_rotate_least_recently_checked_first():
-    """Round-11 freshness rotation (VERDICT r10 next-5): with every
-    query attempted at least once, the window's green-filled slots must
-    surface the OLDEST-checked greens first — a query last green in
-    round 1 precedes one last green in round 10."""
-    order = list(ops.REGISTRY)
-    greens = [n for n in order if n in ops._DRIVER_CHECKED]
-    rounds = [ops._checked_round(n) for n in greens]
+    """Among greens the OLDEST-checked come first — a query last green
+    in round 1 precedes one last green in round 10."""
+    greens = [n for n in ops.REGISTRY if _green(n)]
+    rounds = [ops._VERDICTS[n][0] for n in greens]
     assert rounds == sorted(rounds), (
         "green queries are not ordered oldest-checked-first; first "
         "inversion at "
@@ -210,14 +123,47 @@ def test_green_slots_rotate_least_recently_checked_first():
 
 
 def test_unverified_still_precede_all_greens_after_rotation():
-    """The rotation must only reorder WITHIN the green tier: any
-    not-yet-green oracle query (e.g. a round-11 registration) still
-    precedes every green one."""
+    """The rotation only reorders WITHIN the green tier: any not-yet-green
+    oracle query still precedes every green one."""
     order = list(ops.REGISTRY)
-    green_idx = [i for i, n in enumerate(order) if n in ops._DRIVER_CHECKED]
-    fresh_idx = [
-        i for i, n in enumerate(order)
-        if n not in ops._DRIVER_CHECKED and ops.REGISTRY[n].oracle
-    ]
+    green_idx = [i for i, n in enumerate(order) if _green(n)]
+    fresh_idx = [i for i, n in enumerate(order)
+                 if not _green(n) and ops.REGISTRY[n].oracle]
     if fresh_idx and green_idx:
         assert max(fresh_idx) < min(green_idx)
+
+
+def test_rule_on_synthetic_history(tmp_path, monkeypatch):
+    """The whole rule on a made-up history: one failed query, one
+    never-checked oracle query, one never-checked rows-only query and
+    greens from two rounds, listed in a registration order that the
+    rule must fully rearrange."""
+
+    def spec(name, oracle):
+        return ops.QuerySpec(name=name, fn=lambda spark, sf: None,
+                             oracle="SELECT 1" if oracle else None, doc="")
+
+    registered = [
+        spec("green_r2_a", True),
+        spec("rows_only_new", False),
+        spec("green_r1", True),
+        spec("green_r1_rows_only", False),
+        spec("oracle_new", True),
+        spec("green_r2_b", True),
+        spec("failed", True),
+    ]
+    _write_rounds(tmp_path, monkeypatch, {
+        1: {"green_r1": _GREEN, "green_r1_rows_only": _ROWS_ONLY,
+            "failed": _GREEN, "green_r2_a": _RED},
+        2: {"green_r2_b": _GREEN, "failed": _RED, "green_r2_a": _GREEN},
+    })
+    order = [s.name for s in ops._window_order(registered, ops._driver_verdicts())]
+    assert order == [
+        "failed",
+        "oracle_new",
+        "rows_only_new",
+        "green_r1",
+        "green_r1_rows_only",
+        "green_r2_a",
+        "green_r2_b",
+    ]

@@ -6,7 +6,9 @@ driver's own gate runs at sf0.01 over the FIRST 50 registry entries.
 Scale-dependent divergence (quantile cut points, md5 thresholds,
 sampling fractions) would pass the former and fail the latter, so this
 script replays the driver's exact protocol — row count, sorted-column
-schema, order-insensitive value hash — at any SF before a round ends.
+schema, order-insensitive row-multiset equality (what the driver's value
+hash checks) — at any SF before a round ends.  Cells are canonicalized
+by tests/test_oracle_diff.py's ``canon``, the same rule as the test suite.
 
 Usage:
     python tools/replay_driver.py [--sf /root/testdata/sf0.01] [--n 50]
@@ -16,66 +18,27 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import hashlib
 import json
-import math
 import os
-import struct
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "tests")]
 
-import datetime
-from decimal import Decimal
+import duckdb  # noqa: E402
 
-import duckdb
-
-from cdc_from_sql_and_nosql_to_data_warehouse_spark import operators as ops
-from cdc_from_sql_and_nosql_to_data_warehouse_spark.session import get_spark
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+from cdc_from_sql_and_nosql_to_data_warehouse_spark import operators as ops  # noqa: E402
+from cdc_from_sql_and_nosql_to_data_warehouse_spark.session import get_spark  # noqa: E402
+from conftest import TABLES  # noqa: E402
+from test_oracle_diff import canon, spark_rows  # noqa: E402
 
 
-def canon(v):
-    if v is None:
-        return "null"
-    if isinstance(v, bool):
-        return f"b:{v}"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "f:nan"
-        return "f:" + struct.pack(">d", v).hex()
-    if isinstance(v, Decimal):
-        return "f:" + struct.pack(">d", float(v)).hex()
-    if isinstance(v, int):
-        return f"i:{v}"
-    if isinstance(v, datetime.datetime):
-        return "ts:" + v.isoformat()
-    if isinstance(v, datetime.date):
-        return "d:" + v.isoformat()
-    if isinstance(v, (list, tuple, dict, set)):
-        # The driver's canonicalizer is a pandas sort_values over every
-        # column — it CANNOT hash nested cells and dies with
-        # "unhashable type: 'list'" (the round-3 ERR class).  The local
-        # gate must be at least as strict, so nested output is a hard
-        # local failure, not a silent lenient pass.
-        raise TypeError(
-            f"nested cell {type(v).__name__} in oracle-checked output — the "
-            "driver's pandas canonicalizer cannot hash it; explode to scalar "
-            "rows or serialize (to_json/array_join) in BOTH query and oracle"
-        )
-    if isinstance(v, (bytes, bytearray)):
-        return "by:" + bytes(v).hex()
-    return "s:" + str(v)
-
-
-def value_hash(rows) -> str:
-    digests = sorted(hashlib.md5("|".join(r).encode()).hexdigest() for r in rows)
-    return hashlib.md5("\n".join(digests).encode()).hexdigest()
+def duck_rows(cur) -> tuple[list[str], list[tuple]]:
+    """Sorted column names and canonical rows of an executed DuckDB cursor."""
+    names = [d[0] for d in cur.description]
+    order = sorted(range(len(names)), key=lambda i: names[i])
+    return sorted(names), [tuple(canon(r[i]) for i in order) for r in cur.fetchall()]
 
 
 def main() -> None:
@@ -83,7 +46,8 @@ def main() -> None:
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--n", type=int, default=50)
     ap.add_argument("--all-unchecked", action="store_true",
-                    help="replay every never-driver-checked oracle query, not just the window")
+                    help="replay every oracle query whose newest driver row "
+                    "is not green (failed or never checked), not just the window")
     ap.add_argument("--oracle-timeout", type=float, default=None,
                     help="seconds before the DuckDB oracle is interrupted; "
                     "the query records ORACLE-TIMEOUT (Spark rows noted) "
@@ -174,18 +138,13 @@ def main() -> None:
                 continue
             t0 = time.perf_counter()
             try:
-                df = samp.restrict(ops.REGISTRY[name].fn(spark, args.sf))
-                cols = sorted(df.columns)
-                srows = ["|".join(canon(row[c]) for c in cols)
-                         for row in df.collect()]
-                cur = con.execute(samp.oracle)
-                onames = [d[0] for d in cur.description]
-                order = sorted(range(len(onames)), key=lambda i: onames[i])
-                orows = ["|".join(canon(r[i]) for i in order)
-                         for r in cur.fetchall()]
+                cols, srows = spark_rows(
+                    samp.restrict(ops.REGISTRY[name].fn(spark, args.sf))
+                )
+                ocols, orows = duck_rows(con.execute(samp.oracle))
                 ok = (len(srows) == len(orows)
-                      and cols == sorted(onames)
-                      and value_hash(srows) == value_hash(orows))
+                      and cols == ocols
+                      and sorted(srows) == sorted(orows))
                 status = "OK-SAMPLED" if ok else "FAIL-SAMPLED"
                 if not ok:
                     bad.append(name)
@@ -209,7 +168,7 @@ def main() -> None:
         names = args.names
     elif args.all_unchecked:
         names = [n for n, s in ops.REGISTRY.items()
-                 if s.oracle and n not in ops._DRIVER_CHECKED]
+                 if s.oracle and not ops._VERDICTS.get(n, (0, False))[1]]
     else:
         names = list(ops.REGISTRY)[: args.n]
 
@@ -218,9 +177,7 @@ def main() -> None:
         spec = ops.REGISTRY[name]
         t0 = time.perf_counter()
         try:
-            df = spec.fn(spark, args.sf)
-            cols = sorted(df.columns)
-            srows = ["|".join(canon(row[c]) for c in cols) for row in df.collect()]
+            cols, srows = spark_rows(spec.fn(spark, args.sf))
             if not spec.oracle:
                 recs[name] = {"status": "rows-only", "rows": len(srows),
                               "wall_sec": round(time.perf_counter() - t0, 2)}
@@ -264,12 +221,10 @@ def main() -> None:
                     continue
             else:
                 cur = con.execute(spec.oracle)
-            onames = [d[0] for d in cur.description]
-            order = sorted(range(len(onames)), key=lambda i: onames[i])
-            orows = ["|".join(canon(r[i]) for i in order) for r in cur.fetchall()]
+            ocols, orows = duck_rows(cur)
             ok_rows = len(srows) == len(orows)
-            ok_schema = cols == sorted(onames)
-            ok_hash = value_hash(srows) == value_hash(orows)
+            ok_schema = cols == ocols
+            ok_hash = sorted(srows) == sorted(orows)
             status = "OK " if (ok_rows and ok_schema and ok_hash) else "FAIL"
             if status == "FAIL":
                 bad.append(name)
