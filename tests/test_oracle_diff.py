@@ -59,15 +59,19 @@ def spark_rows(df):
     return cols, [tuple(canon(row[c]) for c in cols) for row in df.collect()]
 
 
-def duck_rows(con, sql):
-    cur = con.execute(sql)
+def cursor_rows(cur):
+    """Sorted column names and canonical rows of an executed DuckDB cursor."""
     names = [d[0] for d in cur.description]
     order = sorted(range(len(names)), key=lambda i: names[i])
-    rows = [tuple(canon(r[i]) for i in order) for r in cur.fetchall()]
+    return sorted(names), [tuple(canon(r[i]) for i in order) for r in cur.fetchall()]
+
+
+def duck_rows(con, sql):
+    names, rows = cursor_rows(con.execute(sql))
     arrow_types = {
         f.name: _arrow_base(f.type) for f in con.execute(sql).fetch_arrow_table().schema
     }
-    return sorted(names), rows, arrow_types
+    return names, rows, arrow_types
 
 
 def _arrow_base(t) -> str:

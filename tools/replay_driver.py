@@ -31,14 +31,7 @@ import duckdb  # noqa: E402
 from cdc_from_sql_and_nosql_to_data_warehouse_spark import operators as ops  # noqa: E402
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.session import get_spark  # noqa: E402
 from conftest import TABLES  # noqa: E402
-from test_oracle_diff import canon, spark_rows  # noqa: E402
-
-
-def duck_rows(cur) -> tuple[list[str], list[tuple]]:
-    """Sorted column names and canonical rows of an executed DuckDB cursor."""
-    names = [d[0] for d in cur.description]
-    order = sorted(range(len(names)), key=lambda i: names[i])
-    return sorted(names), [tuple(canon(r[i]) for i in order) for r in cur.fetchall()]
+from test_oracle_diff import cursor_rows, spark_rows  # noqa: E402
 
 
 def main() -> None:
@@ -141,7 +134,7 @@ def main() -> None:
                 cols, srows = spark_rows(
                     samp.restrict(ops.REGISTRY[name].fn(spark, args.sf))
                 )
-                ocols, orows = duck_rows(con.execute(samp.oracle))
+                ocols, orows = cursor_rows(con.execute(samp.oracle))
                 ok = (len(srows) == len(orows)
                       and cols == ocols
                       and sorted(srows) == sorted(orows))
@@ -221,7 +214,7 @@ def main() -> None:
                     continue
             else:
                 cur = con.execute(spec.oracle)
-            ocols, orows = duck_rows(cur)
+            ocols, orows = cursor_rows(cur)
             ok_rows = len(srows) == len(orows)
             ok_schema = cols == ocols
             ok_hash = sorted(srows) == sorted(orows)
