@@ -6,9 +6,9 @@ atomically swapped pointer; public design).
 Why it exists here: the reference's S3→COPY path publishes by MOVING
 files between prefixes (load_s3_files…handler.py:29-42 — a copy+delete
 "state machine" that is neither atomic nor versioned), and the
-incremental merge stream (streaming/cdc.py) publishes buckets with a
-two-rename swap whose crash window needs startup repair.  A versioned
-table removes the window entirely:
+incremental merge stream (streaming/cdc.py) needs each tick's delta to
+become visible all at once, together with the files it carries
+forward.  A versioned table gives both with no crash window:
 
 - every commit writes a NEW immutable version directory ``_v{n}``
   (staged under a temp name, then one rename);
@@ -23,9 +23,13 @@ table removes the window entirely:
 
 At 100 TB the mechanism is identical (rename→metadata op on HDFS;
 on S3 the pointer flip becomes a conditional PUT — same protocol, one
-primitive swapped); version directories hold partitioned/bucketed
-layouts unchanged.  This is the plain-parquet equivalent of a table
-format's commit log, not a replacement for Delta/Iceberg.
+primitive swapped).  An incremental publisher stages a version as its
+new files plus hard links (``link_tree``) to every file of the current
+version, so the files in a version directory are its manifest: the
+merge stream adds one delta directory per tick and, when the deltas
+outgrow the base, publishes a compaction as a version of its own.
+This is the plain-parquet equivalent of a table format's commit log,
+not a replacement for Delta/Iceberg.
 """
 
 from __future__ import annotations

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -115,6 +116,30 @@ def latest_wins(
 _BASE_SEQ = -(2**63)
 
 
+# seq ties resolve deterministically: REMOVE beats an image at the same
+# seq (delete-wins, the conservative CDC resolution — a resurrected
+# deleted row is worse than a dropped same-instant update), then a
+# content hash so equal-seq EVENT images are never
+# partitioning-dependent.  Base rows skip the hash (most rows of a merge
+# are base rows): that is deterministic only for a keyed target, one row
+# per key — two target rows with one key would tie at the sentinel seq
+# with no tiebreak.
+_TIEBREAK = [
+    "__is_remove DESC",
+    f"CASE WHEN __seq = {_BASE_SEQ}L THEN 0L ELSE xxhash64(to_json(__img)) END DESC",
+]
+
+
+def _event_cols(key: str, seq: str = "seq", removed_key: str = "removedId") -> list[str]:
+    """SQL select items: a change event's key, seq and REMOVE flag as
+    ``__key``, ``__seq`` and ``__is_remove``."""
+    return [
+        f"{_key_carrier(key, removed_key)} AS __key",
+        f"{_ident(seq)} AS __seq",
+        "eventName = 'REMOVE' AS __is_remove",
+    ]
+
+
 def _sql_type(dt: T.DataType) -> str:
     """``dt`` as a SQL type string that parses back to ``dt`` up to
     nullability (nested field names quoted; ``simpleString`` leaves
@@ -163,11 +188,7 @@ def apply_changes(
         return target.unionByName(images) if target is not None else images
 
     valid, _ = split_change_events(changes, keep_remove=True)
-    event_cols = [
-        f"{_key_carrier(key, removed_key)} AS __key",
-        f"{_ident(seq)} AS __seq",
-        "eventName = 'REMOVE' AS __is_remove",
-    ]
+    event_cols = _event_cols(key, seq, removed_key)
     # an event with a known name but NO key carrier (null image AND null
     # removedId) cannot be merged — excluding it here keeps the single
     # NULL "key" from collecting garbage rows; the streaming sinks route
@@ -220,25 +241,8 @@ def apply_changes(
                 *event_cols, _aligned(img_schema, "newImage.")
             ).filter("__key IS NOT NULL")
         )
-    # seq ties resolve deterministically: REMOVE beats an image at the
-    # same seq (delete-wins, the conservative CDC resolution — a
-    # resurrected deleted row is worse than a dropped same-instant
-    # update), then a content hash so equal-seq EVENT images are never
-    # partitioning-dependent.  Base rows skip the hash (most rows of an
-    # incremental merge window are base rows): that is deterministic
-    # only for a keyed target, one row per key — two target rows with
-    # one key would tie at the sentinel seq with no tiebreak.
     return (
-        latest_wins(
-            flat,
-            "__key",
-            "__seq",
-            tiebreak=[
-                "__is_remove DESC",
-                f"CASE WHEN __seq = {_BASE_SEQ}L THEN 0L "
-                "ELSE xxhash64(to_json(__img)) END DESC",
-            ],
-        )
+        latest_wins(flat, "__key", "__seq", tiebreak=_TIEBREAK)
         .filter("NOT __is_remove")
         .select("__img.*")
     )
@@ -334,30 +338,39 @@ def start_append_stream(
     return writer.start()
 
 
-def _key_bucket(key_sql: str, n_buckets: int) -> str:
-    """Stable key→bucket mapping as a SQL expression over ``key_sql``
-    (xxhash64 is deterministic across sessions/partitionings, unlike
-    monotonically_increasing_id)."""
-    return f"CAST(pmod(xxhash64(CAST({key_sql} AS STRING)), {n_buckets}) AS INT)"
+# The merge table is merge-on-read.  A published version ``_v{n}`` is
+# the set of data directories ``__version=k`` it holds, one per commit k
+# that wrote data, each hard-linked forward unchanged from version to
+# version:
+# - a tick writes one DELTA directory: its micro-batch's latest-wins
+#   rows, one row per key, a REMOVE kept as a tombstone row
+#   (``__is_remove``);
+# - the oldest directory is the BASE: the table's first delta, or a
+#   compaction's output — the resolved table without tombstones, alone
+#   in its version.
+# A read resolves the directories by ``__version``: a key's row from
+# the newest directory wins, and a winning tombstone deletes the key.
+_DATA_DIR = "__version"
 
-
-# Schema sidecar: the merged table's StructType as JSON, read with
-# plain Python.  It keeps an all-keys-REMOVEd version (zero parquet
-# files) readable as a typed empty frame, and it spares every read of
-# the table a parquet schema-inference job.
+# Schema sidecar: the table's merge key and StructType as JSON, read
+# with plain Python.  It keeps a version with no live rows readable as a
+# typed empty frame, spares every read of the table a parquet
+# schema-inference job, and fills columns that older files lack with
+# nulls (additive schema evolution).
 _SCHEMA_FILE = "_schema.json"
 
 
-def _read_schema(table_dir: str) -> T.StructType | None:
-    """The table's schema sidecar; None before the first merge."""
+def _read_sidecar(table_dir: str) -> tuple[str, T.StructType] | None:
+    """The table's (merge key, schema); None before the first merge."""
     try:
         with open(os.path.join(table_dir, _SCHEMA_FILE)) as fh:
-            return T.StructType.fromJson(json.load(fh))
+            doc = json.load(fh)
     except FileNotFoundError:
         return None
+    return doc["key"], T.StructType.fromJson(doc["schema"])
 
 
-def _write_schema(table_dir: str, schema: T.StructType) -> None:
+def _write_sidecar(table_dir: str, key: str, schema: T.StructType) -> None:
     """Replace the sidecar atomically: write a temp file, fsync it, then
     ``os.replace`` it into place, so a reader sees the old or the new
     schema and never a partial file.  The rename is made durable by the
@@ -365,32 +378,163 @@ def _write_schema(table_dir: str, schema: T.StructType) -> None:
     path = os.path.join(table_dir, _SCHEMA_FILE)
     tmp = path + ".tmp"
     with open(tmp, "w") as fh:
-        fh.write(schema.json())
+        json.dump({"key": key, "schema": schema.jsonValue()}, fh)
         fh.flush()
         os.fsync(fh.fileno())
     os.replace(tmp, path)
 
 
+def _evolved(schema: T.StructType | None, img: T.StructType) -> T.StructType:
+    """The table schema after a batch whose images have schema ``img``:
+    the image's fields in its order, then the table's fields the image
+    lacks — the column order ``apply_changes`` gives a merge.  Type
+    CHANGES to an existing column fail loudly: silent cast-widening
+    hides real producer bugs."""
+    if schema is None:
+        return img
+    old = {f.name: f.dataType for f in schema.fields}
+    for f in img.fields:
+        if f.name in old and _sql_type(old[f.name]) != _sql_type(f.dataType):
+            raise ValueError(
+                f"column {f.name!r} changed type: {_sql_type(old[f.name])} -> "
+                f"{_sql_type(f.dataType)}; only additive schema evolution is merged"
+            )
+    names = set(img.fieldNames())
+    return T.StructType(img.fields + [f for f in schema.fields if f.name not in names])
+
+
+def _data_dirs(vdir: str) -> list[tuple[int, str]]:
+    """(writing commit, path) of each data directory of ``vdir``, oldest
+    first."""
+    if not os.path.isdir(vdir):
+        return []
+    out = []
+    for entry in os.listdir(vdir):
+        name, _, k = entry.partition("=")
+        if name == _DATA_DIR and k.isdigit():
+            out.append((int(k), os.path.join(vdir, entry)))
+    return sorted(out)
+
+
+def _parquet_files(path: str) -> list[str]:
+    return [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
+
+
+def _write_data(df: DataFrame, path: str) -> int:
+    """Write ``df`` as parquet under ``path``; returns its row count,
+    read from the written files' footers (no Spark job).  The file
+    count is AQE's coalesced width.  No ``_SUCCESS`` marker: the version
+    pointer is the commit marker."""
+    import pyarrow.parquet as pq
+
+    (
+        df.write.mode("overwrite")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .parquet(path)
+    )
+    return sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
+
+
+def _resolve(
+    spark: SparkSession, vdir: str, key: str, schema: T.StructType
+) -> DataFrame:
+    """The live rows of version directory ``vdir``.  Every data
+    directory holds one row per key, so its writing commit alone orders
+    a key's rows; the seq, REMOVE-wins and image-hash tiebreaks were
+    applied within the micro-batch that wrote it.  A version with one
+    data directory is a plain scan."""
+    read_schema = T.StructType(
+        schema.fields
+        + [
+            T.StructField("__is_remove", T.BooleanType()),
+            T.StructField(_DATA_DIR, T.LongType()),
+        ]
+    )
+    rows = spark.read.schema(read_schema).parquet(vdir)
+    if len(_data_dirs(vdir)) > 1:
+        rows = latest_wins(rows, key, _DATA_DIR)
+    return rows.filter("__is_remove IS NOT TRUE").drop("__is_remove", _DATA_DIR)
+
+
 def read_merge_table(spark: SparkSession, table_dir: str) -> DataFrame:
-    """Read a merge-mode target without its internal bucket column.
+    """Read a merge-mode target: the published version's base and
+    deltas resolved latest-wins, tombstones dropped.
 
     PURE READ: resolves the version pointer and reads that immutable
     version directory — no repair, no mutation, no race with a live
-    writer (the prior two-rename swap protocol let a concurrent
-    reader's repair pass delete a writer's in-flight temp, silently
-    destroying a bucket; review-caught, eliminated by construction
-    here).  The ``_schema.json`` sidecar keeps an all-keys-REMOVEd
-    table readable as an empty frame, and with it the read launches no
+    writer.  The ``_schema.json`` sidecar keeps a table with no live
+    rows readable as an empty frame, and with it the read launches no
     Spark job before its action (no schema inference)."""
     from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources import versioned as V
 
     committed = V.current_version(table_dir)
     if committed < 1:
         raise FileNotFoundError(f"merge table {table_dir} has no published version")
-    vdir = os.path.join(table_dir, f"_v{committed}")
-    schema = _read_schema(table_dir)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(vdir).drop("__bucket")
+    key, schema = _read_sidecar(table_dir)
+    return _resolve(spark, os.path.join(table_dir, f"_v{committed}"), key, schema)
+
+
+def _delta_rows(valid: DataFrame, key: str) -> DataFrame:
+    """A micro-batch's delta: per key, the latest event's image — or a
+    tombstone row (key set, ``__is_remove`` true) when that event is a
+    REMOVE.  Ties resolve as in ``apply_changes``; keyless events are
+    dropped."""
+    cols = [
+        f"__key AS {_ident(f)}" if f == key else f"__img.{_ident(f)}"
+        for f in valid.schema["newImage"].dataType.fieldNames()
+    ]
+    flat = valid.selectExpr(*_event_cols(key), "newImage AS __img").filter(
+        "__key IS NOT NULL"
+    )
+    return latest_wins(flat, "__key", "__seq", tiebreak=_TIEBREAK).selectExpr(
+        *cols, "__is_remove"
+    )
+
+
+def _commit_tick(valid: DataFrame, table_dir: str, key: str, keep_versions: int) -> None:
+    """Publish one micro-batch's mergeable events as a delta version,
+    then compact when the deltas have outgrown the base."""
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources import versioned as V
+
+    os.makedirs(table_dir, exist_ok=True)
+    committed = V.current_version(table_dir)
+    V._clean_orphans(table_dir, committed)
+    sidecar = _read_sidecar(table_dir)
+    if sidecar is not None and sidecar[0] != key:
+        raise ValueError(f"merge table {table_dir} is keyed on {sidecar[0]!r}, not {key!r}")
+    schema = _evolved(sidecar[1] if sidecar else None, valid.schema["newImage"].dataType)
+
+    n = committed + 1
+    staging = os.path.join(table_dir, f"{V._TMP_PREFIX}{n}")
+    if not _write_data(_delta_rows(valid, key), os.path.join(staging, f"{_DATA_DIR}={n}")):
+        shutil.rmtree(staging, ignore_errors=True)  # no mergeable rows: no version
+        return
+    if committed >= 1:
+        V.link_tree(os.path.join(table_dir, f"_v{committed}"), staging)
+    # replaced before the version is published: additive evolution keeps
+    # the prior version readable under the new schema.  simpleString
+    # ignores nullability, which churns across parquet round-trips.
+    if sidecar is None or sidecar[1].simpleString() != schema.simpleString():
+        _write_sidecar(table_dir, key, schema)
+    vdir = os.path.join(table_dir, f"_v{n}")
+    os.rename(staging, vdir)
+    V.flip_pointer(table_dir, n)
+
+    # compaction rule: fold the deltas into a new base once they hold as
+    # many bytes as the base — scanned bytes and disk use stay within
+    # about twice the table
+    base, *deltas = [
+        sum(os.path.getsize(f) for f in _parquet_files(path)) for _, path in _data_dirs(vdir)
+    ]
+    if deltas and sum(deltas) >= base:
+        staging = os.path.join(table_dir, f"{V._TMP_PREFIX}{n + 1}")
+        _write_data(
+            _resolve(valid.sparkSession, vdir, key, schema),
+            os.path.join(staging, f"{_DATA_DIR}={n + 1}"),
+        )
+        os.rename(staging, os.path.join(table_dir, f"_v{n + 1}"))
+        V.flip_pointer(table_dir, n + 1)
+    V.vacuum(table_dir, keep_last=keep_versions)
 
 
 def start_merge_stream(
@@ -399,125 +543,66 @@ def start_merge_stream(
     checkpoint_dir: str,
     key: str = "id",
     available_now: bool = True,
-    n_buckets: int = 16,
     errors_dir: str | None = None,
     keep_versions: int = 2,
 ):
-    """B36 apply-changes via foreachBatch, INCREMENTAL: the target is
-    hash-partitioned on ``__bucket = xxhash64(key) % n_buckets`` and
-    each micro-batch merges + rewrites ONLY the buckets containing the
-    batch's keys.  Per-batch I/O is O(touched buckets), not O(table) —
-    a full-table read-modify-write per micro-batch is the classic
-    100 TB killer (on a lakehouse this same body is a Delta/Iceberg
-    MERGE, which prunes files the same way).
+    """B36 apply-changes via foreachBatch, MERGE-ON-READ: each
+    micro-batch appends one delta — its own latest-wins rows plus REMOVE
+    tombstones — and reads no row of the table.  Per-batch I/O is
+    O(batch), not O(table) — a full-table read-modify-write per
+    micro-batch is the classic 100 TB killer.  ``read_merge_table``
+    resolves base ∪ deltas with the same ``latest_wins`` rule.  This is
+    the file sink's per-batch log of Structured Streaming (SIGMOD 2018)
+    and the reference's own shape: change files staged, then merged on
+    the warehouse side.
 
     Publication uses the VERSIONED-TABLE protocol (sources/versioned):
-    each batch stages a complete new version — rewritten touched
-    buckets plus HARD LINKS to the untouched buckets' files (metadata
-    cost only) — then flips the pointer atomically.  Readers resolve
-    the pointer, so there is no crash window and no reader/writer
-    race; a crash anywhere before the flip leaves the table at the
-    prior version, and checkpoint replay of the idempotent latest-wins
-    merge converges.  Old versions are vacuumed down to
-    ``keep_versions`` (hard links make them near-free while present).
-    The staged write skips ``_SUCCESS``: the pointer is the commit
-    marker.
+    each batch stages a complete new version — its delta directory plus
+    HARD LINKS to every data file of the current version (metadata cost
+    only; the files in a version directory are its manifest) — then
+    flips the pointer atomically.  Readers resolve the pointer, so there
+    is no crash window and no reader/writer race; a crash anywhere
+    before the flip leaves the table at the prior version, and
+    checkpoint replay converges: a replayed delta re-applies the same
+    latest-wins rows on top.  A later batch beats an earlier one
+    whatever its seq.  Old versions are vacuumed down to
+    ``keep_versions``; a published version's files are never modified.
 
-    Per-tick cost.  A warm tick launches at most 5 Spark jobs (pinned
-    by tests/test_streaming.py): AQE materializes the cached micro-batch
-    in one job, then the touched-bucket aggregate and the merge write
-    each run a shuffle-map job and a result job.  None is a
-    schema-inference job — the schema comes from the ``_schema.json``
-    sidecar.  What is left is dominated by the number
-    of files a tick creates, not by rows: Hadoop's local filesystem
-    without its native library forks ``chmod`` for every create and
-    mkdir (~6.8 ms per setPermission, ~11.6 ms per create+close).
-    Measured on a 4-core VM at local[3], writing 6,500 rows as 16
-    bucket files took ~415 ms against ~130–160 ms as one file, i.e.
-    ~18 ms per extra bucket directory plus file; spreading the write
-    over 3 tasks did not help (446–490 ms), because the cost is per
-    file, not per row.  Packing the touched buckets into fewer files
-    per tick is therefore the next lever; it needs a per-version file
-    manifest in place of the one-directory-per-bucket layout.
+    Compaction: when the deltas of the new version hold as many bytes as
+    its base, the same tick folds base and deltas into one new base and
+    publishes it as its own version.  A read costs one scan plus a
+    shuffle on the key that grows with the delta count; the rule bounds
+    it at about twice the base, and a compaction rewrites the table at
+    most once per base's worth of changes.
+
+    Per-tick cost.  A delta tick runs the micro-batch's latest-wins
+    shuffle and one write of one file (AQE's coalesced width), with no
+    schema inference (the sidecar supplies the schema) and no persist
+    unless ``errors_dir`` adds a second consumer; the budget is pinned
+    in tests/test_streaming.py.  A batch with no mergeable rows
+    publishes no version, decided from the written files' footers.  The
+    tick's cost is dominated by the files it creates, not by rows:
+    Hadoop's local filesystem without its native library forks
+    ``chmod`` for every create and mkdir.
 
     Error channel: unknown-eventName, corrupt (all-null), and
     keyless-but-valid events are excluded from the merge and appended
     to ``errors_dir`` as NDJSON when given (at-least-once on replay).
     """
-    from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources import versioned as V
-
     batch_key = _key_carrier(key)
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
+        if errors_dir is None:
+            valid, _ = split_change_events(batch, keep_remove=True)
+            _commit_tick(valid, table_dir, key, keep_versions)
+            return
+        # two consumers of the micro-batch: the error write and the delta
         batch = batch.persist()
         try:
             valid, invalid = split_change_events(batch, keep_remove=True)
-            if errors_dir is not None:
-                keyless = valid.filter(f"{batch_key} IS NULL")
-                invalid.unionByName(keyless).write.mode("append").json(errors_dir)
-            valid = valid.filter(f"{batch_key} IS NOT NULL")
-            # touched buckets from the rows that will actually merge —
-            # error rows must not force no-op bucket rewrites
-            touched = sorted(
-                valid.selectExpr(f"collect_set({_key_bucket(batch_key, n_buckets)})")
-                .collect()[0][0]
-            )
-            if not touched:
-                return
-            os.makedirs(table_dir, exist_ok=True)
-            committed = V.current_version(table_dir)
-            V._clean_orphans(table_dir, committed)
-            cur_dir = os.path.join(table_dir, f"_v{committed}")
-            schema = _read_schema(table_dir)
-            if committed >= 1:
-                # read with the sidecar schema (mirrors read_merge_table):
-                # an all-keys-REMOVEd version holds zero parquet files,
-                # and schema inference over it raises
-                # UNABLE_TO_INFER_SCHEMA — which wedged the stream
-                # forever under checkpoint replay (advisory r3)
-                cur_reader = spark.read if schema is None else spark.read.schema(schema)
-                # partition pruning: only the touched bucket dirs are read
-                current = (
-                    cur_reader.parquet(cur_dir)
-                    .filter(f"__bucket IN ({', '.join(map(str, touched))})")
-                    .drop("__bucket")
-                )
-            else:
-                current = None
-            merged = apply_changes(current, valid, key=key, mode="merge").selectExpr(
-                "*", f"{_key_bucket(_ident(key), n_buckets)} AS __bucket"
-            )
-            n = committed + 1
-            staging = os.path.join(table_dir, f"{V._TMP_PREFIX}{n}")
-            (
-                merged.write.mode("overwrite")
-                .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-                .partitionBy("__bucket")
-                .parquet(staging)
-            )
-            if committed >= 1:
-                for entry in os.listdir(cur_dir):
-                    if not entry.startswith("__bucket="):
-                        continue
-                    if int(entry.split("=", 1)[1]) in touched:
-                        continue
-                    V.link_tree(
-                        os.path.join(cur_dir, entry), os.path.join(staging, entry)
-                    )
-            # schema sidecar: REFRESHED whenever the merged schema's
-            # shape differs (a write-once sidecar pinned the first
-            # batch's schema forever and silently nulled later-added
-            # columns; advisory r3).  simpleString ignores nullability,
-            # which churns across parquet round-trips.  Replaced before
-            # the version is published: additive evolution keeps the
-            # prior version readable under the new schema.
-            merged_schema = merged.schema
-            if schema is None or schema.simpleString() != merged_schema.simpleString():
-                _write_schema(table_dir, merged_schema)
-            os.rename(staging, os.path.join(table_dir, f"_v{n}"))
-            V.flip_pointer(table_dir, n)
-            V.vacuum(table_dir, keep_last=keep_versions)
+            keyless = valid.filter(f"{batch_key} IS NULL")
+            invalid.unionByName(keyless).write.mode("append").json(errors_dir)
+            _commit_tick(valid, table_dir, key, keep_versions)
         finally:
             batch.unpersist()
 
@@ -575,8 +660,8 @@ def encode_vector_changes(changes: DataFrame, codebook_literal) -> DataFrame:
     join, no aggregation — so it is legal on an unbounded stream with
     no watermark/state; REMOVEs (null newImage) pass through.  Compose
     with ``start_merge_stream(key="vec_id")`` and the maintained PQ
-    index advances exactly like any other CDC-merged table: bucket-
-    incremental, versioned, crash-safe.  Equivalence to the batch
+    index advances exactly like any other CDC-merged table: one delta
+    per tick, versioned, crash-safe.  Equivalence to the batch
     operator (q_sim_index_incremental) is pinned end-to-end in
     tests/test_stream_index_round9.py."""
     from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.mlprep import (

@@ -1,7 +1,7 @@
-"""Crash safety for the incremental merge's versioned publication
-(SURVEY.md §2.1 B36; the two-rename swap protocol and its repair state
-machine were replaced by sources/versioned-style atomic pointer commits
-after a review found a reader/writer race in the repair pass).
+"""Crash safety for the merge-on-read table's versioned publication
+(SURVEY.md §2.1 B36): each tick stages one delta plus hard links to the
+current version's files, flips the ``_VERSION`` pointer, and — when its
+deltas outgrow the base — publishes a compaction as its own version.
 
 Each test injures one step of the publish protocol and asserts that
 readers never observe a partial state and that checkpoint replay
@@ -158,13 +158,13 @@ def test_reader_never_mutates_writer_state(spark, tdir):
     """The race the old repair protocol had: a reader while a writer's
     staging dir exists must neither fail nor delete anything."""
     table = _build_table(spark, tdir)
-    staging = os.path.join(table, f"{V._TMP_PREFIX}2")
-    os.makedirs(os.path.join(staging, "__bucket=0"))
-    with open(os.path.join(staging, "__bucket=0", "part-inflight.parquet"), "wb") as f:
+    inflight = os.path.join(table, f"{V._TMP_PREFIX}2", f"{cdc._DATA_DIR}=2")
+    os.makedirs(inflight)
+    with open(os.path.join(inflight, "part-inflight.parquet"), "wb") as f:
         f.write(b"writer in flight")
     assert cdc.read_merge_table(spark, table).count() == 40
     assert os.path.isfile(
-        os.path.join(staging, "__bucket=0", "part-inflight.parquet")
+        os.path.join(inflight, "part-inflight.parquet")
     ), "reader deleted the writer's in-flight staging"
 
 
@@ -189,17 +189,28 @@ def test_remove_all_keys_leaves_readable_empty_table(spark, tdir):
 
 
 def test_versions_vacuum_down_to_keep(spark, tdir):
-    """Continuous batches must not accumulate versions: after several
-    published batches only keep_versions remain on disk."""
+    """Continuous batches must not accumulate versions: after every
+    published batch only keep_versions remain on disk.  A batch
+    publishes its delta version, plus a compaction version (one data
+    directory, named by its own version) when its deltas outgrow the
+    base — which one-key batches do."""
     table = f"{tdir}/table"
+    compactions = 0
     for i in range(4):
+        before = V.current_version(table)
         drop, ck = f"{tdir}/drop{i}", f"{tdir}/ck{i}"
         os.makedirs(drop)
         _drop_file(drop, [_trade(i, 1000 + i, float(i))])
         q = cdc.start_merge_stream(cdc.read_change_stream(spark, drop), table, ck)
         q.awaitTermination(120)
-    assert V.current_version(table) == 4
-    assert len(V.list_versions(table)) <= 2
+        now = V.current_version(table)
+        assert now - before in (1, 2)
+        if now - before == 2:
+            compactions += 1
+            assert os.listdir(os.path.join(table, f"_v{now}")) == [f"{cdc._DATA_DIR}={now}"]
+        assert V.list_versions(table) == list(range(max(1, now - 1), now + 1))
+    assert compactions >= 1
+    assert V.current_version(table) == 4 + compactions
     assert cdc.read_merge_table(spark, table).count() == 4
 
 
@@ -274,7 +285,7 @@ def test_crash_at_schema_sidecar_replace_recovers_on_replay(spark, tdir):
     sidecar: readers stay on the prior version AND its schema, and a
     restart with the same checkpoint publishes both."""
     table = _build_table(spark, tdir)
-    prior_schema = cdc._read_schema(table)
+    prior_sidecar = cdc._read_sidecar(table)
     drop2, ck2 = f"{tdir}/drop2", f"{tdir}/ck2"
     os.makedirs(drop2)
     ev = _trade(3, 100, 999.0)
@@ -300,7 +311,7 @@ def test_crash_at_schema_sidecar_replace_recovers_on_replay(spark, tdir):
 
     # injured state: pointer and sidecar both name the prior version
     assert V.current_version(table) == 1
-    assert cdc._read_schema(table) == prior_schema
+    assert cdc._read_sidecar(table) == prior_sidecar
     got = cdc.read_merge_table(spark, table)
     assert "venue" not in got.columns
     assert got.count() == 40
@@ -309,7 +320,7 @@ def test_crash_at_schema_sidecar_replace_recovers_on_replay(spark, tdir):
     q = cdc.start_merge_stream(spark.readStream.schema(evolved).json(drop2), table, ck2)
     q.awaitTermination(120)
     assert V.current_version(table) == 2
-    assert "venue" in cdc._read_schema(table).fieldNames()
+    assert "venue" in cdc._read_sidecar(table)[1].fieldNames()
     got = cdc.read_merge_table(spark, table)
     assert got.count() == 40
     row = got.filter("id = 't3'").collect()[0]
@@ -441,3 +452,163 @@ def test_odd_field_names_merge_like_column_builder(spark, tdir):
     got = cdc.read_merge_table(spark, table)
     assert all(n in got.columns for n in _ODD)
     assert _canon(got) == want
+
+
+# ------------------------------------------------ merge-on-read protocol
+
+
+def _tick(spark, tdir: str, table: str, name: str, events: list[dict]):
+    """Drop ``events`` in a fresh folder and start a merge stream on it
+    with the folder's own checkpoint; returns the started query."""
+    drop = f"{tdir}/drop_{name}"
+    os.makedirs(drop, exist_ok=True)
+    if events:
+        _drop_file(drop, events)
+    return cdc.start_merge_stream(cdc.read_change_stream(spark, drop), table, f"{tdir}/ck_{name}")
+
+
+def _expect_crash(q) -> None:
+    with pytest.raises(Exception, match="injected crash"):
+        q.awaitTermination(120)
+        raise AssertionError(f"query should have failed: {q.exception()}")
+
+
+def _prices(spark, table: str) -> dict[str, float]:
+    return {r["id"]: r["price"] for r in cdc.read_merge_table(spark, table).collect()}
+
+
+# 40 keys updated and 20 new ones: a delta larger than the 40-key base,
+# so the tick that applies it also compacts
+_GROWING = [_trade(i, 100 + i, 1000.0 + i) for i in range(60)]
+_GROWN = {f"t{i}": 1000.0 + i for i in range(60)}
+
+
+def _crash_staged_writes(monkeypatch, table: str, after_flip: bool) -> None:
+    """Make the merge's parquet write into a staging directory crash
+    once its files are written — the delta write (``after_flip`` False)
+    or the compaction write, which follows the tick's pointer flip."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+    v0 = V.current_version(table)
+
+    def crashing(self, path, *a, **kw):
+        real(self, path, *a, **kw)
+        if V._TMP_PREFIX in str(path) and (V.current_version(table) > v0) == after_flip:
+            raise OSError("injected crash after staged write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crashing)
+
+
+def test_crash_after_delta_write_recovers_on_replay(spark, tdir, monkeypatch):
+    """Crash once the delta's files are staged: the pointer still names
+    the old version and readers see it; the replay cleans the staged
+    delta and publishes the same batch."""
+    table = _build_table(spark, tdir)
+    _crash_staged_writes(monkeypatch, table, after_flip=False)
+    _expect_crash(_tick(spark, tdir, table, "d", [_trade(3, 100, 999.0)]))
+    monkeypatch.undo()
+
+    assert V.current_version(table) == 1
+    assert os.path.isdir(os.path.join(table, f"{V._TMP_PREFIX}2"))
+    assert _prices(spark, table)["t3"] == 3.0
+
+    _tick(spark, tdir, table, "d", []).awaitTermination(120)
+    assert V.current_version(table) == 2
+    assert not os.path.exists(os.path.join(table, f"{V._TMP_PREFIX}2"))
+    assert _prices(spark, table) == {**{f"t{i}": float(i) for i in range(40)}, "t3": 999.0}
+
+
+def test_crash_at_compaction_write_recovers_on_replay(spark, tdir, monkeypatch):
+    """Crash while the compaction is staged: the tick's delta version is
+    already published, so readers see the batch applied; the replay
+    re-applies the batch as a new delta, compacts, and converges."""
+    table = _build_table(spark, tdir)
+    _crash_staged_writes(monkeypatch, table, after_flip=True)
+    _expect_crash(_tick(spark, tdir, table, "c", _GROWING))
+    monkeypatch.undo()
+
+    assert V.current_version(table) == 2
+    assert len(cdc._data_dirs(os.path.join(table, "_v2"))) == 2
+    assert _prices(spark, table) == _GROWN
+
+    _tick(spark, tdir, table, "c", []).awaitTermination(120)
+    now = V.current_version(table)
+    assert os.listdir(os.path.join(table, f"_v{now}")) == [f"{cdc._DATA_DIR}={now}"]
+    assert _prices(spark, table) == _GROWN
+
+
+def test_crash_at_pointer_flip_after_compaction_recovers_on_replay(spark, tdir, monkeypatch):
+    """Crash at the pointer flip that would publish the compaction: the
+    complete compacted version is an unpublished orphan, readers stay on
+    the delta version, and the replay cleans the orphan and converges."""
+    table = _build_table(spark, tdir)
+    real_replace = os.replace
+
+    def crashing_replace(src, dst, *a, **kw):
+        if str(dst).endswith(V._POINTER) and V.current_version(table) == 2:
+            raise OSError("injected crash at compaction pointer flip")
+        return real_replace(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "replace", crashing_replace)
+    _expect_crash(_tick(spark, tdir, table, "f", _GROWING))
+    monkeypatch.undo()
+
+    assert V.current_version(table) == 2
+    assert os.listdir(os.path.join(table, "_v3")) == [f"{cdc._DATA_DIR}=3"]
+    assert _prices(spark, table) == _GROWN
+
+    _tick(spark, tdir, table, "f", []).awaitTermination(120)
+    assert V.current_version(table) == 4
+    assert os.listdir(os.path.join(table, "_v4")) == [f"{cdc._DATA_DIR}=4"]
+    assert _prices(spark, table) == _GROWN
+
+
+def _published_files(table: str) -> dict[int, dict[str, tuple[int, int]]]:
+    """version -> relative path -> (inode, bytes) of every file of every
+    published version on disk."""
+    out = {}
+    for v in V.list_versions(table):
+        if v > V.current_version(table):
+            continue
+        vdir = os.path.join(table, f"_v{v}")
+        out[v] = {
+            os.path.relpath(os.path.join(root, f), vdir): (
+                os.stat(os.path.join(root, f)).st_ino,
+                os.stat(os.path.join(root, f)).st_size,
+            )
+            for root, _, files in os.walk(vdir)
+            for f in files
+        }
+    return out
+
+
+def test_published_files_are_immutable_until_vacuum(spark, tdir):
+    """Across delta ticks and compactions, every file of a published
+    version keeps its inode and size for as long as vacuum keeps the
+    version, and a version's files are carried forward by hard link."""
+    table = f"{tdir}/table"
+    seen: dict[int, dict[str, tuple[int, int]]] = {}
+    batches = [
+        [_trade(i, i, float(i)) for i in range(40)],
+        [_trade(3, 100, 5.0)],
+        [_remove(4, 101)],
+        _GROWING,
+        [_trade(7, 300, 7.5)],
+        [_trade(70, 301, 70.0), _remove(8, 302)],
+    ]
+    for i, events in enumerate(batches):
+        _tick(spark, tdir, table, str(i), events).awaitTermination(120)
+        now = _published_files(table)
+        for v, files in now.items():
+            assert seen.setdefault(v, files) == files, f"version {v} changed"
+        # vacuum retires versions below the kept ones only
+        assert all(v >= V.current_version(table) - 1 for v in now)
+    assert len(seen) > len(batches)  # at least one tick compacted
+    carried = [
+        path
+        for v, files in seen.items()
+        for path, ino in files.items()
+        if v - 1 in seen and seen[v - 1].get(path) == ino
+    ]
+    assert carried

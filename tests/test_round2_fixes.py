@@ -3,7 +3,7 @@
 Each test pins a bug that was latent in round 1 because the synthetic
 testdata never hits the edge: short documents (shingling), NULL click
 values (as-of carry), seq<=0 first events (stateful CDC), non-default
-merge keys, and merge-stream table rewrites.
+merge keys, and the merge stream's per-tick writes.
 """
 
 from __future__ import annotations
@@ -149,7 +149,7 @@ def _trade(i: int, seq: int, price: float) -> dict:
     }
 
 
-def test_merge_stream_rewrites_only_touched_buckets(spark, tdir):
+def test_merge_stream_tick_writes_one_delta_file(spark, tdir):
     drop, table, ck1, ck2 = (
         f"{tdir}/drop",
         f"{tdir}/table",
@@ -157,52 +157,43 @@ def test_merge_stream_rewrites_only_touched_buckets(spark, tdir):
         f"{tdir}/ck2",
     )
     os.makedirs(drop)
-    # batch 1: 40 keys spread over the bucket space
     _drop_file(drop, [_trade(i, i, float(i)) for i in range(40)])
     q = cdc.start_merge_stream(cdc.read_change_stream(spark, drop), table, ck1)
     q.awaitTermination(120)
     assert cdc.read_merge_table(spark, table).count() == 40
 
+    import pyarrow.parquet as pq
+
     from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources import versioned as V
 
-    def _bucket_listing(tbl):
+    def _data_files(tbl):
+        """relative path -> inode of the current version's data files"""
         vdir = os.path.join(tbl, f"_v{V.current_version(tbl)}")
         return {
-            d: sorted(os.listdir(os.path.join(vdir, d)))
-            for d in os.listdir(vdir)
-            if d.startswith("__bucket=")
+            os.path.relpath(os.path.join(root, f), vdir): os.stat(os.path.join(root, f)).st_ino
+            for root, _, files in os.walk(vdir)
+            for f in files
+            if f.endswith(".parquet")
         }
 
-    def _bucket_inodes(tbl):
-        vdir = os.path.join(tbl, f"_v{V.current_version(tbl)}")
-        return {
-            d: {f: os.stat(os.path.join(vdir, d, f)).st_ino
-                for f in os.listdir(os.path.join(vdir, d))}
-            for d in os.listdir(vdir)
-            if d.startswith("__bucket=")
-        }
+    before = _data_files(table)
+    assert before
 
-    buckets_before = _bucket_listing(table)
-    inodes_before = _bucket_inodes(table)
-    assert len(buckets_before) > 4  # keys really spread over buckets
-
-    # batch 2: ONE key updated → exactly one bucket partition rewritten
+    # ONE key updated: the tick writes one new data file holding one row
+    # (O(batch), not O(table)) ...
     drop2 = f"{tdir}/drop2"
     os.makedirs(drop2)
     _drop_file(drop2, [_trade(3, 100, 999.0)])
     q = cdc.start_merge_stream(cdc.read_change_stream(spark, drop2), table, ck2)
     q.awaitTermination(120)
-
-    buckets_after = _bucket_listing(table)
-    inodes_after = _bucket_inodes(table)
-    changed = [d for d in buckets_before if buckets_after.get(d) != buckets_before[d]]
-    assert len(changed) == 1  # O(touched buckets), not O(table)
-    # untouched buckets are HARD LINKS to the previous version's files:
-    # same inodes — zero data movement, metadata-only carry-over
-    for d in buckets_before:
-        if d in changed:
-            continue
-        assert inodes_after[d] == inodes_before[d], f"bucket {d} was rewritten"
+    after = _data_files(table)
+    new = sorted(set(after) - set(before))
+    assert len(new) == 1, new
+    vdir = os.path.join(table, f"_v{V.current_version(table)}")
+    assert pq.read_metadata(os.path.join(vdir, new[0])).num_rows == 1
+    # ... and every earlier data file is a HARD LINK to the previous
+    # version's file: same inode — zero data movement
+    assert {p: after[p] for p in before} == before
 
     got = cdc.read_merge_table(spark, table)
     assert got.count() == 40

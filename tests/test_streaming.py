@@ -104,37 +104,48 @@ def _is_schema_inference(spark, job_id: int) -> bool:
 
 
 def test_warm_merge_tick_job_budget(spark, tdir):
-    """A warm merge tick launches at most 5 Spark jobs and none of them
-    infers a parquet schema (the _schema.json sidecar supplies it); the
-    freshness read launches no job before its action.  A streaming
-    query runs its batches under a job group named by its run id."""
+    """A warm delta tick launches 2 Spark jobs (the micro-batch's
+    latest-wins shuffle map and the delta write) and a tick that also
+    compacts launches 4 (the same pair again for the compaction); none
+    of them infers a parquet schema (the _schema.json sidecar supplies
+    it), and the freshness read launches no job before its action.  A
+    streaming query runs its batches under a job group named by its run
+    id."""
     import os
+
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources import versioned as V
 
     drop, table, ckpt = f"{tdir}/drop", f"{tdir}/table", f"{tdir}/ckpt"
     os.makedirs(drop)
-    for tick in range(3):
+
+    def tick(n_keys: int, seq0: int) -> list[int]:
         _drop_events_file(
             drop,
             [
                 {
                     "eventName": "INSERT",
-                    "seq": 100 * tick + i,
-                    "newImage": {"id": f"t{i}", "price": float(tick), "shares": i},
+                    "seq": seq0 + i,
+                    "newImage": {"id": f"t{i}", "price": float(seq0), "shares": i},
                     "removedId": None,
                 }
-                for i in range(60)
+                for i in range(n_keys)
             ],
         )
         q = cdc.start_merge_stream(
             cdc.read_change_stream(spark, drop, max_files_per_trigger=1), table, ckpt
         )
         q.awaitTermination(120)
-    tick_jobs = _group_jobs(spark, str(q.runId))
-    assert 0 < len(tick_jobs) <= 5, tick_jobs
-    assert [j for j in tick_jobs if _is_schema_inference(spark, j)] == []
+        jobs = _group_jobs(spark, str(q.runId))
+        assert [j for j in jobs if _is_schema_inference(spark, j)] == []
+        return jobs
+
+    tick(60, 0)
+    # a 5-key delta is smaller than the 60-key base: no compaction
+    delta_jobs = tick(5, 100)
+    assert V.current_version(table) == 2
+    assert len(delta_jobs) == 2, delta_jobs
 
     sc = spark.sparkContext
-    vdir = os.path.join(table, "_v3")
     try:
         sc.setJobGroup("merge-table-read", "freshness read")
         got = cdc.read_merge_table(spark, table)
@@ -143,12 +154,18 @@ def test_warm_merge_tick_job_budget(spark, tdir):
         assert _group_jobs(spark, "merge-table-read")
         # the detector's positive control: a read without a schema infers one
         sc.setJobGroup("inferring-read", "inferring read")
-        spark.read.parquet(vdir)
+        spark.read.parquet(os.path.join(table, "_v2"))
         inferred = _group_jobs(spark, "inferring-read")
         assert inferred and all(_is_schema_inference(spark, j) for j in inferred)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+    # a 60-key delta brings the deltas past the base: the tick compacts
+    compaction_jobs = tick(60, 200)
+    assert V.current_version(table) == 4
+    assert len(compaction_jobs) == 4, compaction_jobs
+    assert cdc.read_merge_table(spark, table).count() == 60
 
 
 def test_streaming_dedup_with_watermark(spark, tdir):

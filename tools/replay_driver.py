@@ -61,6 +61,11 @@ def main() -> None:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
+    # Spark's Python workers (pandas UDFs) import the package too; they
+    # inherit the environment, not this process's sys.path
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     spark = get_spark("replay")
     spark.sparkContext.setLogLevel("ERROR")
     # at blowup SFs the tables are a handful of ~64 MB part-files; the
