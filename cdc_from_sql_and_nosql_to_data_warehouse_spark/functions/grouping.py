@@ -23,36 +23,39 @@ from pyspark.sql import functions as F
 from .exact import dec
 
 
-def presummed_count_dsum_sets(
+def presum_count_dsum(
     df: DataFrame,
     keys: list[tuple[str, "Column | str"]],
     value: "Column | str",
-    sets: list[tuple[str, ...]],
-    n_alias: str,
-    sum_alias: str,
     prec: int = 12,
     scale: int = 2,
 ) -> DataFrame:
-    """COUNT(*) + exact decimal SUM over grouping sets, pre-aggregated.
-
-    `keys` are (output_name, expression) pairs defining the finest
-    grouping; `sets` lists every NON-empty grouping set by key name —
-    the empty set `()` is always included, as a guaranteed-one-row
-    global aggregate.  Both COUNT and decimal SUM re-aggregate exactly
-    (sum of partial counts / sum of partial decimal sums), so the
-    result is row-identical to a direct ROLLUP/CUBE/GROUPING SETS.
-    """
-    key_names = [n for n, _ in keys]
-    base = (
-        df.groupBy(*[(F.col(c) if isinstance(c, str) else c).alias(n) for n, c in keys])
-        .agg(
-            F.count(F.lit(1)).alias("_pn"),
-            F.sum(dec(value, prec, scale)).alias("_ps"),
-        )
-        # two consumers below (sets + global); the pre-agg is tiny
-        # relative to input, exactly the localCheckpoint case (SCALE.md)
-        .localCheckpoint(eager=False)
+    """The pre-aggregate at the finest grouping: one row per distinct
+    key tuple with its COUNT(*) (`_pn`) and exact decimal SUM (`_ps`).
+    `keys` are (output_name, expression) pairs."""
+    return df.groupBy(
+        *[(F.col(c) if isinstance(c, str) else c).alias(n) for n, c in keys]
+    ).agg(
+        F.count(F.lit(1)).alias("_pn"),
+        F.sum(dec(value, prec, scale)).alias("_ps"),
     )
+
+
+def count_dsum_sets(
+    base: DataFrame,
+    sets: list[tuple[str, ...]],
+    n_alias: str,
+    sum_alias: str,
+) -> DataFrame:
+    """Expand a `presum_count_dsum` pre-aggregate over grouping sets.
+
+    `sets` lists every NON-empty grouping set by key name — the empty
+    set `()` is always included, as a guaranteed-one-row global
+    aggregate.  Both COUNT and decimal SUM re-aggregate exactly (sum of
+    partial counts / sum of partial decimal sums), so the result is
+    row-identical to a direct ROLLUP/CUBE/GROUPING SETS.  `base` has two
+    consumers (the sets and the grand total)."""
+    key_names = [c for c in base.columns if c not in ("_pn", "_ps")]
     parts = (
         base.groupingSets([list(s) for s in sets], *key_names)
         .agg(
@@ -66,3 +69,4 @@ def presummed_count_dsum_sets(
         F.sum("_ps").cast("double").alias(sum_alias),
     )
     return parts.unionByName(grand)
+

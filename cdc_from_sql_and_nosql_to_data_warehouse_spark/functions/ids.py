@@ -48,6 +48,8 @@ def assign_dense_ids(
     ranged = (
         ranged.sortWithinPartitions(*cols)
         .withColumn("__pid", F.spark_partition_id())
+        # barrier: the size job and the numbering job must see the same
+        # range boundaries (repartitionByRange samples its input)
         .localCheckpoint(eager=False)
     )
     sizes = {
@@ -115,6 +117,8 @@ def running_total(
     ranged = (
         ranged.sortWithinPartitions(*range_cols)
         .withColumn("__pid", F.spark_partition_id())
+        # barrier: the offset job and the numbering job must see the same
+        # range boundaries (repartitionByRange samples its input)
         .localCheckpoint(eager=False)
     )
     if not groups:

@@ -29,34 +29,31 @@ value depends on partition placement (grep-pinned: no
 spark_partition_id / monotonically_increasing_id downstream of a
 spread call — assign_dense_ids manages its own layout).
 
-THE CHECKPOINT ELIGIBILITY RULE (companion to spread; the r12/r13
-cross-branch-CSE barriers).  ``localCheckpoint(eager=False)`` is used
-to stop Catalyst re-executing a multi-consumer subtree once per
-consumer.  A frame qualifies ONLY if all three hold:
+THE CHECKPOINT RULE (companion to spread).  Every
+``localCheckpoint`` in the package is one of two kinds and says which
+in a ``barrier:`` or ``A/B:`` comment just above the call
+(tests/test_checkpoint_rule.py fails on an untagged call):
 
-1. **≥2 consumers** whose shared subtree is more expensive to
-   recompute than to materialize (A/B-measured; recomputation of a
-   pruned scan + cheap agg usually WINS — see the reverted pagerank /
-   item_cf-capped / weighted_quantile checkpoints in r12).
-2. **Narrow** — a few int/short-string columns, never payloads
-   (text, embeddings, arrays): blocks land on executor memory/disk.
-3. **Post-aggregate / bounded growth** — the frame must be a strict
-   reduction of its input (distinct keys, per-group aggregates, a
-   calendar- or vocabulary-bounded spine).  Data-scaled-but-reduced
-   frames (distinct (part,supplier) pairs, distinct user-item
-   interactions) are accepted as an explicit trade and noted at the
-   call site; a frame that grows WITH fan-out (exploded shingles,
-   pair joins) is never checkpointed, it is spread and recomputed.
+1. **Barrier** — results or plan validity depend on it: the frozen
+   range partitioning that functions/ids.py numbers against, the
+   materialized parse before the corrupt-record column is referenced
+   (sources/readers.py), the state of an iterative loop (without the
+   cut the plan grows with every round), or a batch-dependent summary
+   whose consumers must read one pass (q_heavy_hitters).
+2. **Shared-subtree cache** — exists only so that 2+ consumers do not
+   recompute one subtree.  It stays only if a paired A/B against
+   recompute (>= 5 alternating parent/change pairs of
+   tools/timing_sweep.py from two checkouts, at sf0.1 and at the sf1
+   blowup) shows it winning by more than the parent's IQR at one
+   scale and losing at neither; the comment carries the numbers.
 
-Recovery trade, stated once for every call site: localCheckpoint
-blocks are EXECUTOR-LOCAL and not fault-tolerant — losing an executor
-after materialization fails the job's remaining consumers, which
-rerun the query from the parquet inputs.  That is acceptable here
-because every checkpointed frame is (a) minutes, not hours, to
-rebuild at 100 TB (one pruned scan + one reduction), and (b) scoped
-to a single query invocation — there is no cross-run state to lose.
-Layout gotchas (frozen width, lost stats) and the keyed-repartition /
-spread-first fixes are documented in OPTIMIZATION_r12.md §checkpoint.
+A cache has real costs, so it must be measured, never assumed: even
+``eager=False`` runs a job when AQE plans the consumers, the
+LogicalRDD hides column statistics from join planning (the r13 q_hits
+regression), it freezes its input partitioning, and its blocks are
+executor-local and not fault-tolerant — losing an executor fails the
+remaining consumers, which rerun the query from its parquet inputs.
+Every checkpointed frame here is scoped to one query invocation.
 """
 
 from __future__ import annotations

@@ -549,6 +549,7 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (interleaved A/B min-of-5: 2.84 → 1.87 s).  One partition is the
     # right layout at ANY scale: the matrix is bounded by the type
     # alphabet, not the data.
+    # barrier: truncates lineage before the MM loop (see above)
     games = games.coalesce(1).localCheckpoint()
     m = games.select(
         "i", "j", (F.col("w_ij") + F.col("w_ji")).alias("n"),
@@ -611,6 +612,7 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
                     eps,
                 ).alias("pi"),
             )
+        # barrier: the loop state, truncated every round
         ).coalesce(1).localCheckpoint()
     return scores.join(wtot, "i").select(
         F.col("i").alias("event_type"),

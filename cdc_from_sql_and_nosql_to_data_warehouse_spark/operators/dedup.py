@@ -125,8 +125,7 @@ def minhash_candidates(
     # (the measured trap; md5_shingle_rows records the 4x number).
     # Shingles as murmur3 ints, never strings: MinHash and the Jaccard
     # verify only need shingle identity.  The flat relation feeds the
-    # signature agg and (as collect_set) both verify sides; truncate
-    # lineage so shingling runs once, not three times.
+    # signature agg and (as collect_set) both verify sides.
     ex = (
         docs.select(F.col(id_col).alias("id"), X.tokens(text_col).alias("toks"))
         .select("id", "toks", F.explode(_shingle_starts(F.col("toks"), shingle_n)).alias("i"))
@@ -136,7 +135,6 @@ def minhash_candidates(
                 *[F.element_at("toks", F.col("i") + k) for k in range(shingle_n)]
             ).alias("h"),
         )
-        .localCheckpoint(eager=False)
     )
     sh = ex.groupBy("id").agg(F.collect_set("h").alias("shingles"))
     # Signature via codegen'd hash aggregate (see minhash_min_aggs): 16
@@ -445,6 +443,8 @@ def md5_jaccard_pairs(
     self-join → exact-Jaccard verify.  One parameterized body replaces
     the previously triplicated block; the band/row/threshold knobs are
     the only thing the variants ever differed in."""
+    # A/B: sf0.1 q_dedup_minhash_md5 1.50 s with it vs 1.81 s without (IQR 0.16, 4/5 pairs);
+    # q_dedup_ngram_jaccard 1.75 vs 1.70 s (IQR 0.24): no loss
     ex = md5_shingle_rows(docs, 3).localCheckpoint(eager=False)
     sh = ex.groupBy("id").agg(F.collect_set("h").alias("shingles"))
     bk = _md5_band_keys(ex, n_bands=n_bands, rows_per_band=rows_per_band)
@@ -530,7 +530,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C2 SimHash near-dup: signature per doc, candidates = equal
     signature (bucket join), no pairwise scan."""
     docs = load_table(spark, sf_dir, "documents")
-    return simhash_equal_pairs(simhash_signatures(docs).localCheckpoint(eager=False))
+    return simhash_equal_pairs(simhash_signatures(docs))
 
 
 _SIMHASH_BITS = 16
@@ -594,10 +594,7 @@ def q_dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     strategy."""
     docs = load_table(spark, sf_dir, "documents")
     ex = md5_shingle_rows(docs).select(F.col("id").alias("doc_id"), "h")
-    # the self-join consumes sig twice: checkpoint so the shingle
-    # explode + bit-sum aggregate run once, not per join side
-    sig = simhash_pack(ex, _SIMHASH_BITS).localCheckpoint(eager=False)
-    return simhash_equal_pairs(sig)
+    return simhash_equal_pairs(simhash_pack(ex, _SIMHASH_BITS))
 
 
 _SQL_DOT_FOLD = """
@@ -761,20 +758,23 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
         # (r12 A/B: er_resolve 8.6 s frozen vs 5.7 s AQE-sized)
         .repartition(F.col("x"))
         # DISK_ONLY (r13): edges grows with the MATCH FAN-OUT, not
-        # with a reduction — the one frame here outside the
-        # eligibility rule's bounded-growth clause.  The default
-        # MEMORY_AND_DISK pinned 148.5M rows of storage on the sf10
-        # probe (100× blowup) and starved execution memory into
-        # UNABLE_TO_ACQUIRE_MEMORY inside the first distinct; disk
-        # blocks keep the lineage barrier (each propagation round
-        # still reads the matcher output once, never re-scores) at a
-        # sequential-read cost instead of a heap cost.
+        # with a reduction.  The default MEMORY_AND_DISK pinned 148.5M
+        # rows of storage on the sf10 probe (100× blowup) and starved
+        # execution memory into UNABLE_TO_ACQUIRE_MEMORY inside the
+        # first distinct; disk blocks keep the lineage barrier (each
+        # propagation round still reads the matcher output once, never
+        # re-scores) at a sequential-read cost instead of a heap cost.
+        # A/B: sf0.1 without it every propagation round rescores the
+        # matcher: q_dedup_clusters_md5 2.38 vs 4.69 s (IQR 0.15), q_er_resolve
+        # 4.71 vs 9.78 s (IQR 0.27), q_dedup_clusters 2.18 vs 3.84 s; 5/5 pairs each
         .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     labels = (
         edges.select(F.col("x").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
+        # barrier: the propagation loop's state; truncated every round so
+        # the plan does not grow with the rounds
         .localCheckpoint(eager=False)
     )
     for _ in range(max_iters):
@@ -789,6 +789,7 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
                 "node",
                 F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
             )
+            # barrier: the loop state, truncated every round
             .localCheckpoint(eager=False)
         )
         changed = (
@@ -997,7 +998,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("rid"),
         loud_src_n("source", "q_dedup_incremental").alias("src_n"),
     )
-    ex = md5_shingle_rows(docs, 3).localCheckpoint(eager=False)
+    ex = md5_shingle_rows(docs, 3)
     sh = ex.groupBy("id").agg(F.collect_set("h").alias("shingles"))
     bk = _md5_band_keys(ex, n_bands=4, rows_per_band=2).join(
         roles, F.col("id") == F.col("rid")
@@ -1071,11 +1072,14 @@ def q_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rebalance=True: parallelize the shingling before the distinct
     # (r13 A/B 3.47→2.77 s; see md5_shingle_rows for the per-consumer
     # split that keeps the band-key pipelines unspread)
+    # A/B: sf0.1 q_setsim_join 5.88 s with it vs 7.05 s without (IQR 0.56, 3/5 pairs),
+    # this site and sets below removed together
     dt = md5_shingle_rows(docs, 3, rebalance=True).distinct().localCheckpoint(eager=False)
     sets = (
         dt.groupBy("id")
         .agg(F.collect_set("h").alias("s"))
         .withColumn("sz", F.size("s"))
+        # A/B: q_setsim_join, as for dt above
         .localCheckpoint(eager=False)  # consumed by prefix + both verify sides
     )
     from cdc_from_sql_and_nosql_to_data_warehouse_spark.functions.ids import (
@@ -1200,6 +1204,8 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     set-fetch joins.  9.3 s → 3.0 s end-to-end (min-of-3).
     """
     docs = load_table(spark, sf_dir, "documents")
+    # A/B: sf0.1 q_dedup_containment 4.81 s with it vs 6.71 s without (IQR 0.49, 5/5 pairs),
+    # this site and sets below removed together
     dt = md5_shingle_rows(docs, 3, rebalance=True).distinct().localCheckpoint(
         eager=False
     )  # (id, h) distinct shingle rows; consumed by df-rank, prefix, B
@@ -1210,6 +1216,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         dt.groupBy("id")
         .agg(F.collect_set("h").alias("s"))
         .withColumn("sz", F.size("s"))
+        # A/B: q_dedup_containment, as for dt above
         .localCheckpoint(eager=False)  # consumed by prefix sizes + verify×2
     )
     from cdc_from_sql_and_nosql_to_data_warehouse_spark.functions.ids import (
@@ -1687,10 +1694,7 @@ def _linkage_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is one partition on single-row-group files — without the
     # rebalance the expensive levenshtein scoring join runs
     # single-threaded off the materialized blocks (measured r12).
-    # Size note (eligibility rule: functions/parallelism.py): one row
-    # per customer with short normalized strings — linear in the
-    # entity table, far below the pair fan-out it feeds; rebuild on
-    # executor loss is one pruned scan inside this invocation.
+    # A/B: sf0.1 q_record_linkage 1.17 s with it vs 1.27 s without (IQR 0.03, 4/5 pairs)
     c = spread(c).localCheckpoint(eager=False)
     _guard_er_blocks(c)
     a, b = c.alias("a"), c.alias("b")

@@ -429,7 +429,7 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(
             F.datediff(F.col("d"), F.lit("1995-01-01").cast("date")), F.lit(7)
         ).cast("bigint").alias("dow"),
-    ).localCheckpoint(eager=False)  # bounded daily frame, two consumers
+    )
     seas = (
         dt.filter(F.col("trend").isNotNull())
         .groupBy("dow")

@@ -131,7 +131,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CSE; an edges checkpoint measured slower — materialization plus
     # stat-less join planning cost more than it saved, r12).  The
     # window fold is the same sorted sum per src, so every double is
-    # unchanged.  e stays checkpointed: each iteration consumes it.
+    # unchanged.
     from pyspark.sql.window import Window as W
 
     tot = F.aggregate(
@@ -139,10 +139,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0),
         lambda a, x: a + x,
     )
-    e = (
-        edges.select("src", "dst", (F.col("w") / tot).alias("p"))
-        .localCheckpoint(eager=False)
-    )
+    e = edges.select("src", "dst", (F.col("w") / tot).alias("p"))
 
     nodes = nat.select(F.col("n_nationkey").alias("id"))
     n_count = nodes.count()  # bounded by the nation domain (25), not the data
@@ -225,6 +222,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         # consumed three times by the wedge/closure joins (CSE policy;
         # bounded ≤ |nation|²)
+        # A/B: sf0.1 q_triangle_count 1.69 s with it vs 2.12 s without (IQR 0.18, 5/5 pairs)
         .localCheckpoint(eager=False)
     )
     e1 = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
@@ -314,9 +312,7 @@ def _co_supply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumes it 3-5× (self-join sides, degree tables): Catalyst has no
     cross-branch CSE, so without the barrier the lineitem scan +
     distinct re-executes per consumer (r12 measured: 5 scans in
-    q_link_prediction's plan).  Post-aggregate and 2 narrow ints per
-    row — the repo's checkpoint-eligibility rule (functions/
-    parallelism.py).  Size/recovery note: distinct (part, supplier)
+    q_link_prediction's plan).  Size/recovery note: distinct (part, supplier)
     is bounded by the catalog cross-product, not by lineitem rows
     (TPC-H: 4 suppliers/part ⇒ ~8 B/row × |part|×4 ≈ low GB at
     100 TB, executor-local); a lost executor reruns one pruned scan +
@@ -334,6 +330,9 @@ def _co_supply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
         .distinct()
+        # A/B: sf0.1 q_label_propagation 6.78 s with it and the two
+        # strength/adjacency sites vs 8.19 s without all three (IQR 0.88, 4/5
+        # pairs); q_link_prediction 9.63 vs 10.62 s (IQR 0.81): no loss
         .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
 
@@ -481,6 +480,7 @@ def _lpa_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
         # consumed by thr AND und: without the barrier the whole
         # hub-capped pair join re-executes per consumer (r12 — the
         # plan audit counted 18 lineitem scans in q_label_propagation)
+        # A/B: q_label_propagation, as for _co_supply_edges
         .localCheckpoint(eager=False)
     )
     thr = strength.agg(
@@ -495,6 +495,7 @@ def _lpa_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
         und.select(F.col("s1").alias("v"), F.col("s2").alias("u"))
         .unionAll(und.select(F.col("s2").alias("v"), F.col("s1").alias("u")))
         # consumed by the label init + every LPA iteration
+        # A/B: q_label_propagation, as for _co_supply_edges
         .localCheckpoint(eager=False)
     )
 

@@ -283,8 +283,7 @@ def q_delete_vector_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # base is consumed twice (as base AND to derive deletes) but is
     # data-scaled: recomputing the pruned scan + per-file window beats
-    # materializing it (measured 0.538 vs 0.569 s at sf0.1; round-2
-    # checkpoint rule)
+    # materializing it (measured 0.538 vs 0.569 s at sf0.1)
     deletes = base.filter(
         md5_unit(F.concat(F.lit("dv-"), F.col("o_orderkey").cast("string"))) < 0.1
     ).select("file_id", "pos")

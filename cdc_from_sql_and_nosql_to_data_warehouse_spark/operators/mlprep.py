@@ -310,8 +310,7 @@ def _pq_codebook(emb: DataFrame) -> DataFrame:
         cb = _sorted_mean_centroids(assigned, ["s", "code"], "sv", "cv").select(
             F.col("s").alias("cs"), "code", "cv"
         )
-    # bounded (≤ M·K* rows); consumed by the encode AND the search LUT
-    return cb.localCheckpoint(eager=False)
+    return cb
 
 
 def _pq_encode(emb: DataFrame, cb: DataFrame | None = None) -> DataFrame:
@@ -865,12 +864,7 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "label", "embedding"
     )
     _assert_clean_embeddings(emb)
-    # scored is consumed twice (threshold agg + final filter); cent is
-    # post-aggregate and label-bounded, so checkpointing it caps the
-    # recompute at one extra pruned scan + distance fold (CSE policy)
-    cent = _sorted_mean_centroids(
-        emb, ["label"], "embedding", "cvec"
-    ).localCheckpoint(eager=False)
+    cent = _sorted_mean_centroids(emb, ["label"], "embedding", "cvec")
     scored = emb.join(F.broadcast(cent), "label").select(
         "vec_id", "label", _sq_dist("embedding", "cvec", _EMB_DIM).alias("d")
     )
@@ -1281,6 +1275,7 @@ def q_mixture_em(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.greatest(iqr, F.lit(1.0)).alias("s2"),
         F.lit(0.5).alias("w1"),
         F.lit(0.5).alias("w2"),
+    # barrier: the EM loop's initial state
     ).localCheckpoint()
     for _ in range(_EM_ITERS):
         delta = (
@@ -1337,6 +1332,7 @@ def q_mixture_em(spark: SparkSession, sf_dir: str) -> DataFrame:
             sig("sq2", "n2", "sx2").alias("s2"),
             F.round(F.col("n1") / F.col("n"), 6).alias("w1"),
             F.round(F.col("n2") / F.col("n"), 6).alias("w2"),
+        # barrier: the EM loop state, truncated every round
         ).localCheckpoint()
     return params.selectExpr(
         "stack(2, 1, w1, m1, s1, 2, w2, m2, s2)"
@@ -1548,26 +1544,13 @@ def q_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_partkey").alias("item_id"),
         )
         .distinct()
-        # consumed by norms + both self-join sides: checkpoint so the
-        # fact join + distinct runs once, not 3× (r12 plan audit:
-        # lineitem/orders each scanned 3×).  Post-aggregate, 2 ints
-        # (eligibility rule: functions/parallelism.py).  Size note:
-        # distinct user×item is bounded by the interaction universe
-        # (≪ fact rows; 8 B/row), and a lost executor re-runs one
-        # join+distinct inside this invocation — the accepted trade.
-        # DISK_ONLY was tried here (r13, the dedup_clusters-edges fix)
-        # and reverted: sf10 probe 249.6 s / 98.2 GB mem-spill with
-        # MEMORY_AND_DISK vs 282.4 s / 96.3 GB with DISK_ONLY — the
-        # spill lives in the self-join aggregates, not this frame.
-        .localCheckpoint(eager=False)
     )
     norms = inter.groupBy("item_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_users")
     )
     deg_w = Window.partitionBy("user_id")
-    # no checkpoint on capped: its recomputation off the inter
-    # checkpoint is one exchange + window per self-join side, and
-    # materializing it measured slower than recomputing (r12 A/B)
+    # no checkpoint on capped: materializing it measured slower than
+    # recomputing (r12 A/B)
     capped = (
         inter.withColumn("deg", F.count(F.lit(1)).over(deg_w))
         .filter(F.col("deg") <= _CF_MAX_DEGREE)

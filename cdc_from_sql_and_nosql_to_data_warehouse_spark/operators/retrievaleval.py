@@ -444,7 +444,7 @@ def q_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < _DE_SAMPLE
     )
-    ex = md5_shingle_rows(docs, 3).localCheckpoint(eager=False)
+    ex = md5_shingle_rows(docs, 3)
     sh = ex.groupBy("id").agg(F.collect_set("h").alias("shingles"))
     a = sh.select(F.col("id").alias("a"), F.col("shingles").alias("sa"))
     b = sh.select(F.col("id").alias("b"), F.col("shingles").alias("sb"))

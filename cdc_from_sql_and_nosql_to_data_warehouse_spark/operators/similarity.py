@@ -362,6 +362,7 @@ def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         # checkpoint stops the n×k scoring join from re-executing per
         # consumer (r12 — no cross-branch CSE)
         .filter(F.col("rn") <= _IVF_NPROBE)
+        # A/B: sf0.1 q_sim_ivf 6.32 s with it vs 7.04 s without (IQR 0.66, 4/5 pairs)
         .localCheckpoint(eager=False)
     )
     # candidates live in exactly their nearest cell; queries PROBE the

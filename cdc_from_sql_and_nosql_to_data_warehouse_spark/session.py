@@ -106,6 +106,12 @@ def get_spark(app_name: str = "cdc_warehouse_spark") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # PySpark 4 captures the Python call site on every functions/
+        # Column call (a stack walk plus ~5x the py4j round trips) only
+        # to annotate error messages; off, F.col("a").cast("int")
+        # .alias("b") sends ~6 py4j commands instead of ~38.  Static
+        # conf: it must be set before the session starts.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
 

@@ -195,6 +195,8 @@ def read_json_with_error_channel(
         # Spark requires a materialization boundary between the raw
         # parse and referencing the corrupt column (SPARK-38523 family):
         # cache-free localCheckpoint keeps it one pass per consumer
+        # barrier: the parse must be materialized before the corrupt-record
+        # column is referenced (Spark rejects it otherwise)
         .localCheckpoint(eager=False)
     )
     good = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")

@@ -450,8 +450,16 @@ def _resolve(
             T.StructField(_DATA_DIR, T.LongType()),
         ]
     )
-    rows = spark.read.schema(read_schema).parquet(vdir)
-    if len(_data_dirs(vdir)) > 1:
+    # read the data directories themselves: Spark treats a root path
+    # whose name starts with "_" (``_v{n}``) as hidden and logs "All
+    # paths were ignored" for it; basePath keeps ``__version`` a column
+    dirs = _data_dirs(vdir)
+    rows = (
+        spark.read.schema(read_schema)
+        .option("basePath", vdir)
+        .parquet(*[path for _, path in dirs])
+    )
+    if len(dirs) > 1:
         rows = latest_wins(rows, key, _DATA_DIR)
     return rows.filter("__is_remove IS NOT TRUE").drop("__is_remove", _DATA_DIR)
 

@@ -35,6 +35,8 @@ def spark(tmp_path_factory) -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
+        # same as session.get_spark: no per-call call-site capture
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )
     yield s

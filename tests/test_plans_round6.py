@@ -162,9 +162,7 @@ def test_ks_test_aggregates_before_prefix_sum(spark):
 
 
 def test_seasonal_decompose_windows_on_daily_frame(spark):
-    # the daily frame (bounded) is checkpointed once for its two
-    # consumers, so the trend window lives BEHIND the checkpoint; pin
-    # it on the pre-checkpoint subtree instead: the moving-average
+    # pin the trend window on the daily subtree: the moving-average
     # window's direct input must be the per-day aggregate
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
@@ -189,8 +187,13 @@ def test_seasonal_decompose_windows_on_daily_frame(spark):
         assert "Scan" not in line, text
     else:
         raise AssertionError("no HashAggregate below the trend window:\n" + text)
-    # and in the operator's final (post-checkpoint) plan, the 7-row
-    # seasonal frame joins back broadcast with no further windows
+    # and in the operator's executed plan, the 7-row seasonal frame
+    # joins back broadcast, and the daily aggregate runs once: one
+    # orders scan, the seasonal branch reading its shuffle as a
+    # ReusedExchange (the trend window reruns on the daily rows only)
     df = REGISTRY["q_seasonal_decompose"].fn(spark, SF_DIR)
     assert plans.has_broadcast_join(df)
-    assert "Window" not in plans.formatted_plan(df)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert sum("FileScan" in line for line in final.splitlines()) == 1, final
+    assert "ReusedExchange" in final, final

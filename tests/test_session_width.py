@@ -105,3 +105,28 @@ def test_tune_noop_at_driver_scale(spark):
         spark.conf.unset(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
         )
+
+
+def test_column_build_sends_few_py4j_commands(spark, monkeypatch):
+    # PySpark 4's call-site capture (spark.python.sql.dataFrameDebugging
+    # .enabled, default true) costs ~35 py4j commands for this
+    # expression; the engine and test sessions turn it off (~5)
+    from pyspark.sql import functions as F
+
+    F.col("a").cast("int").alias("b")  # first use resolves JVM classes
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    send = client.send_command
+    monkeypatch.setattr(
+        client, "send_command", lambda *a, **k: sent.append(1) or send(*a, **k)
+    )
+    F.col("a").cast("int").alias("b")
+    assert len(sent) <= 8, len(sent)
+
+
+def test_get_spark_turns_call_site_capture_off():
+    # the conf is static: get_spark must set it before the session starts
+    import inspect
+
+    src = inspect.getsource(S.get_spark)
+    assert '"spark.python.sql.dataFrameDebugging.enabled", "false"' in src
