@@ -55,7 +55,6 @@ the artifact itself, and any unknown class flips benign=false.
 
 from __future__ import annotations
 
-import gc
 import hashlib
 import json
 import multiprocessing
@@ -546,6 +545,7 @@ def _paired_ratios(
 
 def _bench() -> None:
     from cdc_from_sql_and_nosql_to_data_warehouse_spark import operators as ops
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.plans.measure import timed_write, warm
     from cdc_from_sql_and_nosql_to_data_warehouse_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -576,25 +576,7 @@ def _bench() -> None:
     spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
 
-    # Warmup: JVM/codegen on a trivial job, then one pass over the input
-    # files (footer reads + OS page cache) so the first timed query
-    # measures query execution, not cold-file costs every query after
-    # it wouldn't pay.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources.readers import load_table
-
-    # noop write, not count(): parquet count() is answered from footer
-    # stats without touching column chunks, which would leave the data
-    # pages cold for the first timed query
-    for t in ("lineitem", "orders", "customer", "events", "documents", "embeddings"):
-        load_table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-    # one warmup iteration of every headline query at the smallest SF:
-    # compiles/caches the generated code so the timed runs measure
-    # execution, not Janino compilation
-    for name in HEADLINE:
-        ops.REGISTRY[name].fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
-            "overwrite"
-        ).save()
+    warm(spark, sf_dir, HEADLINE, "/root/testdata/sf0.001")
 
     # PRIMARY metric: min of 3 BACK-TO-BACK runs per query — the
     # steady-state number, directly comparable to r1/r2's best-of-2
@@ -608,16 +590,7 @@ def _bench() -> None:
     runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
 
     def timed(name: str) -> float:
-        fn = ops.REGISTRY[name].fn
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        # drop py4j refs promptly so ContextCleaner can unpersist
-        # localCheckpoint blocks instead of letting them pile up
-        # (spark.cleaner.periodicGC default is 30 min — longer than
-        # the whole bench)
-        gc.collect()
-        return dt
+        return timed_write(spark, lambda: ops.REGISTRY[name].fn(spark, sf_dir), name)
 
     # paired calibration: one yardstick sample brackets every block
     yard_walls: list[float] = []

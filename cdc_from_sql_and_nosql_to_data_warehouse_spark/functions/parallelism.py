@@ -42,10 +42,15 @@ in a ``barrier:`` or ``A/B:`` comment just above the call
    whose consumers must read one pass (q_heavy_hitters).
 2. **Shared-subtree cache** — exists only so that 2+ consumers do not
    recompute one subtree.  It stays only if a paired A/B against
-   recompute (>= 5 alternating parent/change pairs of
-   tools/timing_sweep.py from two checkouts, at sf0.1 and at the sf1
-   blowup) shows it winning by more than the parent's IQR at one
-   scale and losing at neither; the comment carries the numbers.
+   recompute shows it winning at one scale (sf0.1 or the sf1
+   blowup) and losing at neither; the comment carries the numbers.
+   The instrument is tools/timing_sweep.py (bench.py's warm-up and
+   noop-sink timing, plans/measure.py), run in >= 5 alternating
+   launches from three checkouts: the parent, the change, and an
+   identical-code control copy of the parent.  A win must exceed both
+   the parent's IQR and the parent-vs-control gap: on a shared 4-core
+   host two copies of one tree differ by ~10%, as much as most
+   checkpoint effects.
 
 A cache has real costs, so it must be measured, never assumed: even
 ``eager=False`` runs a job when AQE plans the consumers, the

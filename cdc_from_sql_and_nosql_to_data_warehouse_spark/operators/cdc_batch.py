@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators import register
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources.readers import load_table
+from cdc_from_sql_and_nosql_to_data_warehouse_spark.streaming.cdc import latest_wins
 
 
 @register("q_csv_scan", oracle="SELECT COUNT(*) AS n_rows FROM lineitem")
@@ -136,16 +137,12 @@ def q_upsert_latest_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark-native: one shuffle on the key, row_number desc, keep rn=1.
     At scale this is the standard MERGE-free dedup-on-read."""
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc_nulls_last("ts"), F.col("event_id").desc())
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("ts").alias("last_ts"),
-            F.col("event_type").alias("last_event_type"),
-            F.col("value").alias("last_value"),
-        )
+    # ts DESC is NULLS LAST in Spark SQL: a NULL ts loses to any timestamp
+    return latest_wins(ev, "user_id", "ts", tiebreak=["event_id DESC"]).select(
+        "user_id",
+        F.col("ts").alias("last_ts"),
+        F.col("event_type").alias("last_event_type"),
+        F.col("value").alias("last_value"),
     )
 
 
@@ -241,12 +238,8 @@ def q_snapshot_union_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.filter(F.col("o_orderdate") >= F.lit("2000-01-01 00:00:00").cast("timestamp"))
         .select("o_orderkey", F.lit("U").alias("o_orderstatus"), "o_totalprice", F.lit(2).alias("seq"))
     )
-    unioned = snap.unionByName(cdc)
-    w = Window.partitionBy("o_orderkey").orderBy(F.col("seq").desc())
-    return (
-        unioned.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
+    return latest_wins(snap.unionByName(cdc), "o_orderkey").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
     )
 
 

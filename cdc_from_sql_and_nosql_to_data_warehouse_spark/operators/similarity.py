@@ -84,7 +84,8 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # p^b + b·p^(b-1)(1-p), and L independent tables turn that into
 # 1-(1-hit)^L — the two recall knobs (L, probe radius) and the cost
 # knob (b = bucket selectivity) called out in SCALE.md.
-# Measured frontier (tools/lsh_frontier.py, recall@5 sf0.001/sf0.01):
+# Measured frontier (tools/lsh_frontier.py, last present at commit
+# 73d0218; recall@5 sf0.001/sf0.01):
 #   L=8 → 0.68/0.64   L=12 → 0.76/0.80   L=16 → 0.80/0.88   L=20 → 0.80/0.92
 # on this corpus (true neighbors at cosine ~0.32 ⇒ ~60% per-bit
 # agreement — an adversarially flat geometry), so recall is bought
@@ -102,7 +103,8 @@ def _table_planes(
     seed: int = 42,
 ) -> list[list[list[float]]]:
     # knobs resolve at CALL time (not def time) so a tuning sweep can
-    # patch the module constants (tools/lsh_frontier.py)
+    # patch the module constants (as tools/lsh_frontier.py did; it was
+    # removed after commit 73d0218)
     n_tables = _L_TABLES if n_tables is None else n_tables
     n_bits = _N_BITS if n_bits is None else n_bits
     rng = random.Random(seed)

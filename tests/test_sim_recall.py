@@ -48,7 +48,8 @@ def test_lsh_recall_at_5(spark, sf_dir):
     r = _recall(exact, lsh)
     # measured 0.80 at sf0.001 / 0.88 at sf0.01 with 16 tables x 8 bits,
     # Hamming-1 probes; the full L-sweep frontier (0.68/0.64 at L=8 up
-    # to 0.80/0.92 at L=20) is in SCALE.md and tools/lsh_frontier.py —
+    # to 0.80/0.92 at L=20) is in SCALE.md (measured by
+    # tools/lsh_frontier.py, last present at commit 73d0218) —
     # true neighbors sit at cosine ~0.32 ⇒ ~60% per-bit agreement
     assert r >= 0.8, f"LSH recall@5 = {r} at {sf_dir}"
 

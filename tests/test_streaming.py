@@ -92,14 +92,23 @@ def _is_schema_inference(spark, job_id: int) -> bool:
     """Parquet schema inference reads the footers in a job over a
     parallelized file list, so its stage graph holds a
     ParallelCollectionRDD; no stage of a DataFrame plan over files
-    does."""
+    does.  Only the stages that ran are consulted: a skipped stage
+    computes nothing (the stage that produced its output belongs to an
+    earlier job of the same group, which is checked itself), and once a
+    session holds more than ``spark.ui.retainedStages`` stages the status
+    store evicts skipped stages, graph included, at its next cleanup."""
     sc = spark.sparkContext
+    tracker = sc.statusTracker()
     store = sc._jsc.sc().statusStore()
     graph = spark._jvm.org.apache.spark.ui.scope.RDDOperationGraph
+    ran = []
+    for stage_id in tracker.getJobInfo(job_id).stageIds:
+        info = tracker.getStageInfo(stage_id)
+        if info is not None and info.numCompletedTasks > 0:
+            ran.append(stage_id)
     return any(
-        "ParallelCollectionRDD"
-        in graph.makeDotFile(store.operationGraphForStage(stage_id))
-        for stage_id in sc.statusTracker().getJobInfo(job_id).stageIds
+        "ParallelCollectionRDD" in graph.makeDotFile(store.operationGraphForStage(stage_id))
+        for stage_id in ran
     )
 
 

@@ -55,9 +55,9 @@ from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.dedup import (
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.packing import (
     PACK_CAPACITY,
 )
+from cdc_from_sql_and_nosql_to_data_warehouse_spark.session import get_spark, size_shuffle
 from tools.curation_pipeline import (
     apply_dist_match,
-    build_session,
     dist_match_probs,
     stage_decontaminate,
     stage_dedup,
@@ -120,8 +120,9 @@ def main() -> None:
     ap.add_argument("--label", default="1x")
     args = ap.parse_args()
 
-    spark = build_session()
+    spark = get_spark("curation_delta")
     spark.sparkContext.setLogLevel("ERROR")
+    size_shuffle(spark, args.base)
 
     base = (
         spark.read.parquet(f"{args.base}/documents.parquet")

@@ -46,7 +46,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.functions import text as X
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.functions.ids import (
@@ -61,6 +61,7 @@ from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.dedup import (
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.packing import (
     PACK_CAPACITY,
 )
+from cdc_from_sql_and_nosql_to_data_warehouse_spark.session import get_spark, size_shuffle
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources import versioned
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -253,27 +254,10 @@ def make_audit_token_conservation(expected_tokens: int):
 
 
 # -------------------------------------------------------------- runner
-def build_session() -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return (
-        SparkSession.builder.appName("curation_pipeline")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        )
-        .getOrCreate()
-    )
-
-
 def main() -> None:
-    spark = build_session()
+    spark = get_spark("curation_pipeline")
     spark.sparkContext.setLogLevel("ERROR")
+    size_shuffle(spark, SF_DIR)
     shutil.rmtree(PIPE_DIR, ignore_errors=True)
 
     corpus = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(

@@ -30,28 +30,32 @@ Blowup construction (deterministic, no RNG):
     (kmeans assign, PQ ADC, brute-force topk) are row-linear and
     duplicate points exercise the tie paths.
 
-Task-skew capture: the Spark UI REST API (`/api/v1/.../taskSummary`)
-already serves per-stage task-duration quantiles; the tool snapshots
-the completed-stage list around each run and pulls max/median executor
-run time for the new stages.  Stages whose median task is <50 ms are
-ignored for the skew verdict (a 2 ms vs 40 ms scheduling wobble is not
-a straggler).
+Task-skew capture: each timed run goes under its own job group, and
+plans/measure.stage_stats reads the group's completed stages with
+their median/max task run time from the application status store (the
+per-stage ``taskSummary`` quantiles the UI shows).  Stages whose median
+task is <50 ms are ignored for the skew verdict (a 2 ms vs 40 ms
+scheduling wobble is not a straggler).
 """
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
-import time
-import urllib.request
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cdc_from_sql_and_nosql_to_data_warehouse_spark import operators as ops
+from cdc_from_sql_and_nosql_to_data_warehouse_spark.plans.measure import (
+    stage_stats,
+    timed_write,
+    warm,
+)
+from cdc_from_sql_and_nosql_to_data_warehouse_spark.session import get_spark, size_shuffle
 
 # round 11: env-parametrized so the same generator builds the sf10
 # (100-replica) probe dir without forking the tool
@@ -200,26 +204,6 @@ X100_QUERIES = [
 ]
 
 
-def build_session() -> SparkSession:
-    """get_spark() twin with the UI on (REST API is the skew probe)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return (
-        SparkSession.builder.appName("scale_slope")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "0")
-        .config("spark.ui.retainedStages", "5000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .getOrCreate()
-    )
-
-
 def _shifted(df: DataFrame, table: str, i: int) -> DataFrame:
     for k in KEY_SHIFT[table]:
         df = df.withColumn(k, F.col(k) + F.lit(i * STRIDE).cast("long"))
@@ -277,57 +261,30 @@ def build_blowup(spark: SparkSession) -> None:
         f.write("ok")
 
 
-# ---------------------------------------------------------------- REST
-def _api(spark: SparkSession, path: str):
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{base}/api/v1/applications/{app}{path}", timeout=10) as r:
-        return json.load(r)
+def stage_skews(stats: dict) -> list[dict]:
+    """max/median task run time of each stage in a plans/measure
+    ``stage_stats`` record whose tasks clear the skew floors."""
+    return [
+        {
+            "stage": s["stage"],
+            "median_ms": round(s["median_ms"], 1),
+            "max_ms": round(s["max_ms"], 1),
+            "skew": round(s["max_ms"] / max(s["median_ms"], 1e-9), 2),
+        }
+        for s in stats["per_stage"]
+        if s["median_ms"] >= SKEW_FLOOR_MS and s["max_ms"] >= SKEW_ABS_FLOOR_MS
+    ]
 
 
-def _completed_stage_ids(spark: SparkSession) -> set[tuple[int, int]]:
-    return {
-        (s["stageId"], s["attemptId"])
-        for s in _api(spark, "/stages?status=complete")
-    }
-
-
-def _stage_skews(spark: SparkSession, new_ids: set[tuple[int, int]]) -> list[dict]:
-    out = []
-    for sid, att in sorted(new_ids):
-        try:
-            summ = _api(
-                spark, f"/stages/{sid}/{att}/taskSummary?quantiles=0.5,1.0"
-            )
-        except Exception:
-            continue  # stage with no completed tasks (skipped by AQE)
-        med, mx = summ["executorRunTime"]
-        if med < SKEW_FLOOR_MS or mx < SKEW_ABS_FLOOR_MS:
-            continue
-        out.append(
-            {
-                "stage": sid,
-                "median_ms": round(med, 1),
-                "max_ms": round(mx, 1),
-                "skew": round(mx / max(med, 1e-9), 2),
-            }
-        )
-    return out
-
-
-def timed_run(spark: SparkSession, name: str, sf_dir: str, runs: int = 2):
-    """min-of-N wall time + task-skew stats for the LAST run."""
+def measured(spark: SparkSession, name: str, sf_dir: str, runs: int = 2):
+    """Min-of-``runs`` wall of registry query ``name`` at ``sf_dir`` and
+    the stage skews of its last run, at the shuffle width the engine
+    sizes for ``sf_dir``."""
     fn = ops.REGISTRY[name].fn
-    best, skews = float("inf"), []
-    for _ in range(runs):
-        before = _completed_stage_ids(spark)
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        skews = _stage_skews(spark, _completed_stage_ids(spark) - before)
-        best = min(best, dt)
-        gc.collect()
-    return best, skews
+    size_shuffle(spark, sf_dir)
+    groups = [f"{name}@{sf_dir}:{uuid.uuid4().hex[:8]}" for _ in range(runs)]
+    best = min(timed_write(spark, lambda: fn(spark, sf_dir), g) for g in groups)
+    return best, stage_skews(stage_stats(spark, groups[-1]))
 
 
 # ---- fixed-delta / variable-base maintenance table (VERDICT r9
@@ -360,18 +317,12 @@ DELTA_FLAT_MAX = 5.0  # sub-second walls on a noisy host; flat ≈ ≤5×
 MAINT_WIN_MAX = 1.0  # at the top decade maintenance must WIN outright
 
 
-def _timed(fn, runs: int = 2) -> float:
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        fn()
-        best = min(best, time.perf_counter() - t0)
-        gc.collect()
-    return round(best, 3)
-
-
-def _noop(df: DataFrame) -> None:
-    df.write.format("noop").mode("overwrite").save()
+def _best_of_2(spark: SparkSession, builds: dict) -> dict:
+    """{key: min-of-2 wall} of each noop-sink build in ``builds``."""
+    return {
+        k: round(min(timed_write(spark, build, f"maint:{k}") for _ in range(2)), 3)
+        for k, build in builds.items()
+    }
 
 
 def measure_index_maintenance(spark: SparkSession) -> dict:
@@ -424,38 +375,27 @@ def measure_index_maintenance(spark: SparkSession) -> dict:
         codes(mlprep._pq_encode(emb, cb)).write.mode("overwrite").parquet(
             store
         )
-        t_delta = _timed(lambda: _noop(codes(mlprep._pq_encode(delta_vecs, cb))))
-        t_maint = _timed(
-            lambda: _noop(
-                spark.read.parquet(store)
+        walls = _best_of_2(
+            spark,
+            {
+                "t_delta_work_sec": lambda: codes(mlprep._pq_encode(delta_vecs, cb)),
+                "t_maintain_sec": lambda: spark.read.parquet(store)
                 .join(gone, "vec_id", "left_anti")
-                .unionByName(codes(mlprep._pq_encode(delta_vecs, cb)))
-            )
-        )
-        t_rebuild = _timed(
-            lambda: _noop(
-                codes(
+                .unionByName(codes(mlprep._pq_encode(delta_vecs, cb))),
+                "t_rebuild_sec": lambda: codes(
                     mlprep._pq_encode(
-                        emb.join(gone, "vec_id", "left_anti").unionByName(
-                            delta_vecs
-                        ),
+                        emb.join(gone, "vec_id", "left_anti").unionByName(delta_vecs),
                         cb,
                     )
-                )
-            )
+                ),
+            },
         )
         out["ann_pq"][label] = {
             "base_rows": emb.count(),
             "delta_rows": n_delta,
-            "t_delta_work_sec": t_delta,
-            "t_maintain_sec": t_maint,
-            "t_rebuild_sec": t_rebuild,
+            **walls,
         }
-        print(
-            f"maint ann_pq {label}: delta={t_delta}s maintain={t_maint}s "
-            f"rebuild={t_rebuild}s",
-            flush=True,
-        )
+        print(f"maint ann_pq {label}: {walls}", flush=True)
 
     # ---------- text df table: fixed delta docs; pre-images arrive
     # with the CDC feed (modeled by an untimed checkpoint — a real feed
@@ -504,11 +444,11 @@ def measure_index_maintenance(spark: SparkSession) -> dict:
         doc_terms(docs).groupBy("term").agg(
             F.count(F.lit(1)).alias("df")
         ).write.mode("overwrite").parquet(store)
-        t_delta = _timed(lambda: _noop(signed_delta()))
-
-        def maintain() -> None:
-            merged = (
-                spark.read.parquet(store)
+        walls = _best_of_2(
+            spark,
+            {
+                "t_delta_work_sec": signed_delta,
+                "t_maintain_sec": lambda: spark.read.parquet(store)
                 .join(signed_delta(), "term", "full_outer")
                 .select(
                     "term",
@@ -517,30 +457,18 @@ def measure_index_maintenance(spark: SparkSession) -> dict:
                         + F.coalesce(F.col("delta"), F.lit(0))
                     ).alias("df"),
                 )
-                .filter(F.col("df") > 0)
-            )
-            _noop(merged)
-
-        t_maint = _timed(maintain)
-        t_rebuild = _timed(
-            lambda: _noop(
-                doc_terms(docs).groupBy("term").agg(
-                    F.count(F.lit(1)).alias("df")
-                )
-            )
+                .filter(F.col("df") > 0),
+                "t_rebuild_sec": lambda: doc_terms(docs)
+                .groupBy("term")
+                .agg(F.count(F.lit(1)).alias("df")),
+            },
         )
         out["text_df"][label] = {
             "base_rows": docs.count(),
             "delta_rows": n_tdelta,
-            "t_delta_work_sec": t_delta,
-            "t_maintain_sec": t_maint,
-            "t_rebuild_sec": t_rebuild,
+            **walls,
         }
-        print(
-            f"maint text_df {label}: delta={t_delta}s maintain={t_maint}s "
-            f"rebuild={t_rebuild}s",
-            flush=True,
-        )
+        print(f"maint text_df {label}: {walls}", flush=True)
 
     verdicts = {}
     for idx, tbl in out.items():
@@ -574,25 +502,19 @@ def measure_index_maintenance(spark: SparkSession) -> dict:
 
 
 def main() -> None:
-    spark = build_session()
+    spark = get_spark("scale_slope")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
 
     print("building 10x blowup ...", flush=True)
     build_blowup(spark)
-
-    # warmup: codegen/JIT at sf0.001 so timed runs measure execution
-    spark.range(1000).selectExpr("sum(id)").collect()
-    for name in QUERIES:
-        ops.REGISTRY[name].fn(spark, "/root/testdata/sf0.001").write.format(
-            "noop"
-        ).mode("overwrite").save()
+    warm(spark, BASE_DIR, QUERIES, "/root/testdata/sf0.001")
 
     results: dict[str, dict] = {}
     for name in QUERIES:
-        t1, skew1 = timed_run(spark, name, BASE_DIR)
-        t10, skew10 = timed_run(spark, name, BLOWUP_DIR)
+        t1, skew1 = measured(spark, name, BASE_DIR)
+        t10, skew10 = measured(spark, name, BLOWUP_DIR)
         worst10 = max((s["skew"] for s in skew10), default=1.0)
         # Preemption guard (round 7): on a time-shared host a single
         # hypervisor-descheduled task reads as a >SKEW_MAX straggler
@@ -604,7 +526,7 @@ def main() -> None:
         retries = 0
         while worst10 > SKEW_MAX and retries < 2:
             retries += 1
-            t10b, skew10b = timed_run(spark, name, BLOWUP_DIR)
+            t10b, skew10b = measured(spark, name, BLOWUP_DIR)
             worst10b = max((s["skew"] for s in skew10b), default=1.0)
             t10 = min(t10, t10b)
             if worst10b < worst10:
@@ -632,7 +554,7 @@ def main() -> None:
     # two-decade ratio costs only the cheap small-SF runs.
     x100: dict[str, dict] = {}
     for name in X100_QUERIES:
-        t001, _ = timed_run(spark, name, X100_BASE_DIR)
+        t001, _ = measured(spark, name, X100_BASE_DIR)
         t100 = results[name]["t_10x_sec"]
         x100[name] = {
             "t_1x_sec": round(t001, 3),

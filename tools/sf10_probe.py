@@ -1,12 +1,13 @@
 """sf10 probe (VERDICT r10 next-3): the second decade up.
 
 Runs the 10 most expensive DATA-SCALED headliners against the
-100×-of-sf0.1 blowup (~60M-row lineitem / ~500k docs, built by
-tools/scale_slope.build_blowup with SPARK_GRAFT_REPLICAS=100) and
-records, per query: min-of-2 wall, worst in-stage task skew, and the
-SPILL POSTURE — memory/disk bytes spilled and shuffle-write volume
-summed over the query's own completed stages (Spark UI REST,
-/stages?status=complete per-stage totals) — the "does this fit or
+100×-of-sf0.1 blowup (~60M-row lineitem / ~500k docs; the first run
+builds it with tools/scale_slope.build_blowup under
+SPARK_GRAFT_REPLICAS=100) and records, per query: the wall of one timed run after bench.py's warm-up
+(plans/measure.warm, codegen pass at sf0.001), the worst in-stage task
+skew under scale_slope's floors, and the SPILL POSTURE — memory/disk
+bytes spilled, shuffle-write and input volume summed over the query's
+completed stages (plans/measure.stage_stats) — the "does this fit or
 thrash" answer the wall alone can't give.
 
 Usage:
@@ -19,16 +20,20 @@ Writes SF10_PROBE.json at the repo root (and prints one JSON line).
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools import scale_slope as S
 from cdc_from_sql_and_nosql_to_data_warehouse_spark import operators as ops
+from cdc_from_sql_and_nosql_to_data_warehouse_spark.plans.measure import (
+    stage_stats,
+    timed_write,
+    warm,
+)
+from cdc_from_sql_and_nosql_to_data_warehouse_spark.session import get_spark, size_shuffle
 
 # the judge-named data-scaled top ten, CHEAPEST FIRST so a
 # wall-budget cut still leaves most of the decade table (the two
@@ -47,52 +52,23 @@ QUERIES = [
     "q_setsim_join",
 ]
 
-RUNS = int(os.environ.get("SPARK_GRAFT_PROBE_RUNS", "1"))
-
-
-def _stage_totals(spark, new_ids) -> dict:
-    """Spill/shuffle totals over the query's own completed stages."""
-    tot = {"mem_spill_mb": 0.0, "disk_spill_mb": 0.0,
-           "shuffle_write_mb": 0.0, "input_mb": 0.0}
-    stages = {
-        (s["stageId"], s["attemptId"]): s
-        for s in S._api(spark, "/stages?status=complete")
-    }
-    for key in new_ids:
-        s = stages.get(key)
-        if not s:
-            continue
-        tot["mem_spill_mb"] += s.get("memoryBytesSpilled", 0) / 2**20
-        tot["disk_spill_mb"] += s.get("diskBytesSpilled", 0) / 2**20
-        tot["shuffle_write_mb"] += s.get("shuffleWriteBytes", 0) / 2**20
-        tot["input_mb"] += s.get("inputBytes", 0) / 2**20
-    return {k: round(v, 1) for k, v in tot.items()}
-
 
 def main() -> None:
     names = sys.argv[1:] or QUERIES
-    spark = S.build_session()
+    sf_dir = S.BLOWUP_DIR
+    spark = get_spark("sf10_probe")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+    S.build_blowup(spark)  # no-op once the blowup's _BLOWUP_OK marker exists
     # Shuffle width must SCALE WITH DATA (this probe's r11 finding:
     # core-count width gave ~220 s-median reduce tasks here).  r12
     # moved the sizing INTO the engine — session.size_shuffle derives
     # width from input volume (bytes/64MB, floor=cores, cap 4096;
     # SPARK_GRAFT_SHUFFLE_PARTITIONS still overrides) — so the probe
-    # now exercises the same path any engine caller gets.
-    from cdc_from_sql_and_nosql_to_data_warehouse_spark.session import size_shuffle
-
-    sf_dir = S.BLOWUP_DIR
+    # exercises the same path any engine caller gets.
     width = size_shuffle(spark, sf_dir)
     print(f"shuffle width (engine-sized): {width}", flush=True)
-    # warmup: page-cache the inputs + compile one trivial job
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources.readers import load_table
-
-    for t in ("lineitem", "orders", "customer", "events", "documents",
-              "embeddings"):
-        load_table(spark, sf_dir, t).write.format("noop").mode(
-            "overwrite").save()
+    warm(spark, sf_dir, names, "/root/testdata/sf0.001")
 
     # MERGE into the existing artifact (r12): a partial probe run (one
     # or two named queries) must refresh only its own rows, never wipe
@@ -119,45 +95,31 @@ def main() -> None:
     )
     rec.setdefault("queries", {})
     for name in names:
-        best, skews = float("inf"), []
-        spill = {}
-        for _ in range(RUNS):
-            before = S._completed_stage_ids(spark)
-            t0 = time.perf_counter()
-            ops.REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite").save()
-            dt = time.perf_counter() - t0
-            new = S._completed_stage_ids(spark) - before
-            if dt < best:
-                best = dt
-                skews = S._stage_skews(spark, new)
-                spill = _stage_totals(spark, new)
-            gc.collect()
-        worst_skew = max((s["skew"] for s in skews), default=None)
+        wall = timed_write(spark, lambda: ops.REGISTRY[name].fn(spark, sf_dir), name)
+        stats = stage_stats(spark, name)
+        spill = {
+            k: round(stats[k], 1)
+            for k in ("mem_spill_mb", "disk_spill_mb", "shuffle_write_mb", "input_mb")
+        }
+        worst_skew = max((s["skew"] for s in S.stage_skews(stats)), default=None)
         rec["queries"][name] = {
             # keep any orthogonal keys (e.g. sf10_value's "value"
             # verdict) a previous tool merged onto this query's row
             **rec["queries"].get(name, {}),
-            "wall_sec": round(best, 2),
+            "wall_sec": round(wall, 2),
             "worst_stage_skew": worst_skew,
             **spill,
         }
-        print(f"{name:26s} {best:7.2f}s skew={worst_skew} {spill}",
+        print(f"{name:26s} {wall:7.2f}s skew={worst_skew} {spill}",
               flush=True)
-        with open(os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "SF10_PROBE.json"), "w") as f:
+        with open(out_path, "w") as f:
             json.dump(rec, f, indent=1)
     rec["total_wall_sec"] = round(
         sum(q["wall_sec"] for q in rec["queries"].values()), 2
     )
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "SF10_PROBE.json",
-    )
-    with open(out, "w") as f:
+    with open(out_path, "w") as f:
         json.dump(rec, f, indent=1)
-    print(json.dumps({"total": rec["total_wall_sec"], "written": out}))
+    print(json.dumps({"total": rec["total_wall_sec"], "written": out_path}))
 
 
 if __name__ == "__main__":

@@ -81,15 +81,23 @@ def write_feed(drop_dir: str, scale: int = 1) -> int:
     return seq
 
 
-def batch_stats(query) -> tuple[int, list[float]]:
-    rows, durs = 0, []
-    for p in query.recentProgress:
-        n = p.get("numInputRows", 0)
-        if not n:
-            continue  # zero-input housekeeping batch
-        rows += n
-        durs.append(float(p["batchDuration"]))
-    return rows, durs
+def progress_stats(query, wall: float) -> tuple[dict, list[float]]:
+    """Throughput and per-micro-batch latency from the query's progress
+    events (numInputRows and batchDuration are Spark's own accounting),
+    plus the batch durations in order.  Zero-input housekeeping batches
+    are left out."""
+    durs = [
+        float(p["batchDuration"]) for p in query.recentProgress if p.get("numInputRows", 0)
+    ]
+    rows = sum(p.get("numInputRows", 0) for p in query.recentProgress)
+    return {
+        "input_rows": rows,
+        "wall_sec": round(wall, 3),
+        "rows_per_sec": round(rows / wall, 1),
+        "micro_batches": len(durs),
+        "batch_ms_median": round(statistics.median(durs), 1),
+        "batch_ms_p95": round(sorted(durs)[math.ceil(len(durs) * 0.95) - 1], 1),
+    }, durs
 
 
 def _await_or_die(q, timeout_sec: int, mode: str) -> None:
@@ -119,22 +127,13 @@ def run_mode(
             stream, out, ckpt, key="id", errors_dir=os.path.join(work, "err_m")
         )
     _await_or_die(q, 600, mode)
-    wall = time.perf_counter() - t0
-    rows, durs = batch_stats(q)
-    final_rows = (
+    doc, _ = progress_stats(q, time.perf_counter() - t0)
+    doc["final_table_rows"] = (
         cdc.read_merge_table(spark, out).count()
         if mode == "merge"
         else spark.read.parquet(out).count()
     )
-    return {
-        "input_rows": rows,
-        "final_table_rows": final_rows,
-        "wall_sec": round(wall, 3),
-        "rows_per_sec": round(rows / wall, 1),
-        "micro_batches": len(durs),
-        "batch_ms_median": round(statistics.median(durs), 1),
-        "batch_ms_p95": round(sorted(durs)[math.ceil(len(durs) * 0.95) - 1], 1),
-    }
+    return doc
 
 
 def write_event_feed(drop_dir: str, scale: int = 1, densify: bool = True) -> int:
@@ -241,23 +240,12 @@ def _run_stateful(
                 spark.conf.set(
                     "spark.sql.streaming.stateStore.providerClass", prev_provider
                 )
-    wall = time.perf_counter() - t0
-    rows, durs = batch_stats(q)
-    state_rows = 0
-    for p in q.recentProgress:
-        for so in p.get("stateOperators", []):
-            state_rows = max(state_rows, so.get("numRowsTotal", 0))
-    emitted = spark.read.parquet(out).count()
-    doc = {
-        "input_rows": rows,
-        emitted_key: emitted,
-        "max_state_rows": state_rows,
-        "wall_sec": round(wall, 3),
-        "rows_per_sec": round(rows / wall, 1),
-        "micro_batches": len(durs),
-        "batch_ms_median": round(statistics.median(durs), 1),
-        "batch_ms_p95": round(sorted(durs)[math.ceil(len(durs) * 0.95) - 1], 1),
-    }
+    doc, _ = progress_stats(q, time.perf_counter() - t0)
+    doc["max_state_rows"] = max(
+        (so.get("numRowsTotal", 0) for p in q.recentProgress for so in p.get("stateOperators", [])),
+        default=0,
+    )
+    doc[emitted_key] = spark.read.parquet(out).count()
     if rocksdb is not None:
         doc["state_store"] = "rocksdb" if rocksdb else "hdfs-backed (default)"
     return doc
@@ -467,26 +455,15 @@ def run_index_maintain(
         errors_dir=os.path.join(work, f"err_{tag}"),
     )
     _await_or_die(q, 1800, tag)
-    wall = time.perf_counter() - t0
-    rows, durs = batch_stats(q)
+    doc, durs = progress_stats(q, time.perf_counter() - t0)
     half = len(durs) // 2
-    growth = (
-        round(
-            statistics.median(durs[half:]) / statistics.median(durs[:half]), 2
-        )
+    doc["index_rows"] = cdc.read_merge_table(spark, out).count()
+    doc["batch_ms_growth_2nd_half_vs_1st"] = (
+        round(statistics.median(durs[half:]) / statistics.median(durs[:half]), 2)
         if half >= 1
         else 1.0
     )
-    return {
-        "input_rows": rows,
-        "index_rows": cdc.read_merge_table(spark, out).count(),
-        "wall_sec": round(wall, 3),
-        "rows_per_sec": round(rows / wall, 1),
-        "micro_batches": len(durs),
-        "batch_ms_median": round(statistics.median(durs), 1),
-        "batch_ms_p95": round(sorted(durs)[math.ceil(len(durs) * 0.95) - 1], 1),
-        "batch_ms_growth_2nd_half_vs_1st": growth,
-    }
+    return doc
 
 
 def main() -> None:

@@ -1,9 +1,14 @@
 """Full-registry timing sweep for the optimization round (guide §1).
 
-Times EVERY registry query at --sf-dir against the noop sink (min of
---runs back-to-back executions after a warmup pass at sf0.001 for
-codegen), labels each job, and writes {name: sec} JSON so the round's
-before/after deltas are grounded in the same protocol as bench.py.
+Times EVERY registry query (or the named ones) at --sf-dir against the
+noop sink: min of --runs back-to-back executions after bench.py's
+warm-up (plans/measure.warm, whose codegen pass runs at --warmup-dir),
+each run under job group ``sweep:<name>``.  Writes {name: sec} JSON, so
+before/after deltas rest on the same protocol as bench.py.
+
+This is the A/B instrument of the checkpoint rule
+(functions/parallelism.py): run the parent, the change and an
+identical-code control copy of the parent in alternating launches.
 
 Usage:
     python tools/timing_sweep.py [--sf-dir /root/testdata/sf0.1]
@@ -13,11 +18,9 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -33,8 +36,8 @@ def main() -> None:
     args = ap.parse_args()
 
     from cdc_from_sql_and_nosql_to_data_warehouse_spark import operators as ops
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.plans.measure import timed_write, warm
     from cdc_from_sql_and_nosql_to_data_warehouse_spark.session import get_spark, tune
-    from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources.readers import load_table
 
     spark = get_spark("timing_sweep")
     spark.sparkContext.setLogLevel("ERROR")
@@ -44,27 +47,19 @@ def main() -> None:
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
 
     names = args.names or list(ops.REGISTRY)
-    spark.range(1000).selectExpr("sum(id)").collect()
-    for t in ("lineitem", "orders", "customer", "events", "documents", "embeddings"):
-        load_table(spark, args.sf_dir, t).write.format("noop").mode("overwrite").save()
-
-    def run_once(name: str, sf_dir: str) -> float:
-        spark.sparkContext.setJobDescription(f"sweep:{name}")
-        t0 = time.perf_counter()
-        ops.REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        gc.collect()
-        return dt
+    # skip the codegen pass (rather than fail every query) when the
+    # warmup dir is absent on this host — the target --sf-dir may
+    # still be valid
+    warm_dir = None if args.no_warmup or not os.path.isdir(args.warmup_dir) else args.warmup_dir
+    warm(spark, args.sf_dir, names, warm_dir)
 
     timings: dict[str, float] = {}
-    # skip warmup (rather than fail every query) when the warmup dir is
-    # absent on this host — the target --sf-dir may still be valid
-    warmup = not args.no_warmup and os.path.isdir(args.warmup_dir)
     for i, name in enumerate(names):
         try:
-            if warmup:
-                run_once(name, args.warmup_dir)
-            walls = [run_once(name, args.sf_dir) for _ in range(args.runs)]
+            walls = [
+                timed_write(spark, lambda: ops.REGISTRY[name].fn(spark, args.sf_dir), f"sweep:{name}")
+                for _ in range(args.runs)
+            ]
             timings[name] = round(min(walls), 3)
             print(f"[{i}] {name}: {timings[name]}s", flush=True)
         except Exception as e:
